@@ -82,18 +82,29 @@ def _annotated(spark: SparkSession, sf_dir: str) -> DataFrame:
     return annotate_sentences_df(split_sentences(_interleaved(spark, sf_dir)))
 
 
-def _alias_names(spark: SparkSession, sf_dir: str) -> list[str]:
+def _alias_names(mentions: DataFrame) -> list[str]:
     """Deterministic alias inventory: the N most frequent mention
     surfaces (ties by text) — derived from the data, stable across
     runs and cluster sizes."""
-    from phonlp_spark.pipeline.annotate import mentions_df
     rows = (
-        mentions_df(_annotated(spark, sf_dir))
-        .groupBy("text").count()
+        mentions.groupBy("text").count()
         .orderBy(F.col("count").desc(), F.col("text"))
         .limit(N_ALIAS_NAMES).collect()
     )
     return [r["text"].replace(" ", "_") for r in rows]
+
+
+def _graph(spark: SparkSession, sf_dir: str):
+    """The KG graph build behind entry() and the kg_nodes / kg_edges /
+    kg_edges_integrity queries: the annotated corpus, linked against
+    the alias dictionary of its own top mention surfaces.  The build's
+    caches stay held: the returned tables are lazy and the driver
+    consumes them after this returns."""
+    from phonlp_spark.pipeline.linking import build_alias_dict
+    from phonlp_spark.pipeline.materialize import build_graph
+    return build_graph(
+        _annotated(spark, sf_dir),
+        lambda mentions: build_alias_dict(spark, _alias_names(mentions)))
 
 
 _CENTS_CACHE: dict[str, list] = {}
@@ -122,17 +133,7 @@ def _trained_cents(spark: SparkSession, sf_dir: str) -> list:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: documents -> annotate -> triples -> link -> canonical
     graph edges, on sf0.001."""
-    from phonlp_spark.pipeline.annotate import mentions_df, triples_df
-    from phonlp_spark.pipeline.linking import build_alias_dict
-    from phonlp_spark.pipeline.materialize import build_graph
-
-    sf_dir = "/root/testdata/sf0.001"
-    annotated = _annotated(spark, sf_dir).cache()
-    mentions = mentions_df(annotated).cache()
-    alias = build_alias_dict(spark, _alias_names(spark, sf_dir))
-    _linked, _nodes, edges = build_graph(
-        mentions, triples_df(annotated), alias)
-    return edges.select("subj_id", "pred", "obj_id", "doc_id", "sent_id")
+    return _graph(spark, "/root/testdata/sf0.001").edges
 
 
 # ---------------------------------------------------------------------------
@@ -199,27 +200,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return triples_df(_annotated(s, d))
     q["kg_triples"] = kg_triples
 
-    def kg_nodes(s, d):
-        from phonlp_spark.pipeline.annotate import mentions_df, triples_df
-        from phonlp_spark.pipeline.linking import build_alias_dict
-        from phonlp_spark.pipeline.materialize import build_graph
-        ann = _annotated(s, d).cache()
-        men = mentions_df(ann).cache()
-        alias = build_alias_dict(s, _alias_names(s, d))
-        _l, nodes, _e = build_graph(men, triples_df(ann), alias)
-        return nodes
-    q["kg_nodes"] = kg_nodes
-
-    def kg_edges(s, d):
-        from phonlp_spark.pipeline.annotate import mentions_df, triples_df
-        from phonlp_spark.pipeline.linking import build_alias_dict
-        from phonlp_spark.pipeline.materialize import build_graph
-        ann = _annotated(s, d).cache()
-        men = mentions_df(ann).cache()
-        alias = build_alias_dict(s, _alias_names(s, d))
-        _l, _n, edges = build_graph(men, triples_df(ann), alias)
-        return edges
-    q["kg_edges"] = kg_edges
+    q["kg_nodes"] = lambda s, d: _graph(s, d).nodes
+    q["kg_edges"] = lambda s, d: _graph(s, d).edges
 
     def kg_span_invariant(s, d):
         """Docs whose span sequence survives the pipeline unchanged —
@@ -385,14 +367,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ('E'|'X' + 12 hex, linking.py:62,161), node ids must be unique
         and canonicals non-null.  All violation columns oracle to the
         constant 0; the anchor (n_docs) comes from the input table."""
-        from phonlp_spark.pipeline.annotate import mentions_df, triples_df
-        from phonlp_spark.pipeline.linking import build_alias_dict
-        from phonlp_spark.pipeline.materialize import build_graph
-        ann = _annotated(s, d).cache()
-        men = mentions_df(ann).cache()
-        alias = build_alias_dict(s, _alias_names(s, d))
-        _l, nodes, edges = build_graph(men, triples_df(ann), alias)
-        nodes = nodes.cache()
+        graph = _graph(s, d)
+        edges, nodes = graph.edges, graph.nodes.cache()
         id_re = "^[EX][0-9a-f]{12}$"
         nid = nodes.select("entity_id")
         subj_missing = (edges.join(nid, edges["subj_id"] == nid["entity_id"],
@@ -435,9 +411,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from phonlp_spark.pipeline.annotate import mentions_df
         from phonlp_spark.pipeline.linking import (
             build_alias_dict, link_mentions, norm_surface)
-        names = _alias_names(s, d)
+        mentions = mentions_df(_annotated(s, d))
+        names = _alias_names(mentions)
         alias = build_alias_dict(s, names)
-        linked = link_mentions(mentions_df(_annotated(s, d)), alias)
+        linked = link_mentions(mentions, alias)
         # dictionary mapping rebuilt from the name list alone: each
         # name's variants (itself, space form, 2-segment truncation),
         # normalized, grouped to the min md5-derived id — mirrors

@@ -37,10 +37,8 @@ def _sf_from_dir(d: str) -> float:
 def _kg_pipeline(spark, sf_dir: str):
     """The flagship job: documents -> annotate -> triples -> link ->
     CC -> canonical edges; returns (n_docs, n_edges)."""
-    from pyspark.sql import functions as F
-
-    from phonlp_spark.pipeline.annotate import (
-        annotate_sentences_df, mentions_df, triples_df)
+    from __spark_entry__ import _alias_names
+    from phonlp_spark.pipeline.annotate import annotate_sentences_df
     from phonlp_spark.pipeline.ingest import (
         interleave_documents, split_sentences)
     from phonlp_spark.pipeline.linking import build_alias_dict
@@ -54,18 +52,12 @@ def _kg_pipeline(spark, sf_dir: str):
     annotated = annotate_sentences_df(split_sentences(docs),
                                       salt_partitions=nslots * 2,
                                       columns=("mentions", "triples"))
-    mt = annotated.select("doc_id", "sent_id", "mentions", "triples").cache()
-    mentions = mentions_df(mt)
-    names = [
-        r["text"].replace(" ", "_")
-        for r in mentions.groupBy("text").count()
-        .orderBy(F.col("count").desc(), F.col("text")).limit(40).collect()
-    ]
-    alias = build_alias_dict(spark, names)
-    _l, _n, edges = build_graph(mentions, triples_df(mt), alias)
-    n_edges = edges.count()
+    graph = build_graph(
+        annotated,
+        lambda mentions: build_alias_dict(spark, _alias_names(mentions)))
+    n_edges = graph.edges.count()
     n_docs = flat.count()
-    mt.unpersist()
+    graph.release()
     return n_docs, n_edges
 
 
@@ -276,8 +268,7 @@ def _scaling_job(spark, n_docs: int | None = None) -> tuple[int, int]:
     """The flagship KG job on the synthesized interleaved table, with a
     fixture alias dictionary (no data-derived collects — every job in
     here is pipeline work, not measurement scaffolding)."""
-    from phonlp_spark.pipeline.annotate import (
-        annotate_sentences_df, mentions_df, triples_df)
+    from phonlp_spark.pipeline.annotate import annotate_sentences_df
     from phonlp_spark.pipeline.ingest import _seeded_names, split_sentences
     from phonlp_spark.pipeline.linking import build_alias_dict
     from phonlp_spark.pipeline.materialize import build_graph
@@ -285,18 +276,15 @@ def _scaling_job(spark, n_docs: int | None = None) -> tuple[int, int]:
     n_docs = SCALE_DOCS if n_docs is None else n_docs
     docs = spark.read.parquet(_ensure_scale_input(n_docs, spark=spark))
     n = spark.sparkContext.defaultParallelism
+    # only the mention/triple stream crosses the Arrow boundary: the
+    # token-level arrays are never built (pruning can't cross Python)
     annotated = annotate_sentences_df(split_sentences(docs),
                                       salt_partitions=2 * n,
                                       columns=("mentions", "triples"))
-    # only the mention/triple stream crosses the Arrow boundary: the
-    # token-level arrays are never built (pruning can't cross Python)
-    mt = annotated.select("doc_id", "sent_id", "mentions", "triples").cache()
-    mentions = mentions_df(mt)
-    alias = build_alias_dict(spark, _seeded_names(40, 43))
-    _l, _n, edges = build_graph(mentions, triples_df(mt), alias)
-    n_edges = edges.count()
-    mt.unpersist()
-    spark.catalog.clearCache()
+    graph = build_graph(annotated,
+                        build_alias_dict(spark, _seeded_names(40, 43)))
+    n_edges = graph.edges.count()
+    graph.release()
     return n_docs, n_edges
 
 

@@ -234,7 +234,7 @@ def uas_las_aligned(gold: DataFrame, system: DataFrame,
     the applyInPandas walk per reference (the r5 regression).  Callers
     scoring many metrics over one alignment pass ``cache_registry``
     (a list) — the cached frame is appended so THEY own unpersist
-    timing (the build_graph convention); without a registry the entry
+    timing; without a registry the entry
     lives until Spark's LRU storage eviction.  MEMORY_ONLY (not the
     cache() default MEMORY_AND_DISK) keeps that eviction real: disk-
     spilled blocks are never dropped by the storage LRU, so a

@@ -234,8 +234,8 @@ def lsh_verified_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
     _shingles_wide) that Spark's exchange reuse materializes once per
     query, so re-shingling no longer multiplies with consumers even
     uncached.  Pass a list to additionally persist the shingles and
-    receive the handle for unpersisting after the action (the
-    build_graph convention); default None keeps the operator stateless.
+    receive the handle for unpersisting after the action; default None
+    keeps the operator stateless.
     """
     sh = _shingles_wide(docs, n, text_col, key_col)
     if cache_registry is not None:

@@ -94,16 +94,12 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     path unchanged.
     """
     spark = edges.sparkSession
-    e = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst").distinct().localCheckpoint()
-    )
+    e = edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
     if small_graph_edges is None:
         small_graph_edges = SMALL_GRAPH_EDGES
     # one bounded collect decides the strategy AND feeds the driver
     # fast path (formerly count + collect = two jobs; the limit keeps
-    # the driver transfer capped for huge graphs, which then iterate
-    # distributed on the checkpointed edge set)
+    # the driver transfer capped for huge graphs)
     sample = e.limit(small_graph_edges + 1).collect()
     if not sample:
         return spark.createDataFrame([], "node string, component string")
@@ -112,6 +108,9 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
         return spark.createDataFrame(
             _union_find_local(pairs), "node string, component string")
 
+    # only the distributed rounds checkpoint: the driver path above
+    # would never read (or release) a checkpointed edge set
+    e = e.localCheckpoint()
     prev = None
     for _ in range(max_iter):
         e = _small_star(_large_star(e)).localCheckpoint()

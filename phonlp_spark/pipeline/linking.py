@@ -389,7 +389,7 @@ def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
     return m.join(surf_map, "nsurf", "left").drop("nsurf")
 
 
-def same_as_edges(alias_dict: DataFrame, linked: DataFrame = None) -> DataFrame:
+def same_as_edges(alias_dict: DataFrame) -> DataFrame:
     """Undirected same-as edges for canonicalization: dictionary
     entities sharing a normalized alias surface.  (Same-surface ties
     between mentions need no edges: linking is deterministic per

@@ -24,9 +24,12 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from phonlp_spark.pipeline.annotate import (
     annotate_sentences_df,
@@ -36,7 +39,11 @@ from phonlp_spark.pipeline.annotate import (
 )
 from phonlp_spark.pipeline.cc import canonical_map
 from phonlp_spark.pipeline.ingest import split_sentences
-from phonlp_spark.pipeline.linking import link_mentions, same_as_edges
+from phonlp_spark.pipeline.linking import (
+    link_surfaces,
+    norm_surface,
+    same_as_edges,
+)
 
 MANIFEST_COLS = ("run_id", "bucket", "status", "docs", "sentences", "triples",
                  "wall_ms", "attempt", "input_fingerprint", "n_buckets")
@@ -77,36 +84,45 @@ def done_buckets(spark: SparkSession, out_dir: str, fingerprint: str,
     ]
 
 
-def dict_canonical_names(alias_dict: DataFrame) -> DataFrame:
-    """(cid, dict_canonical): canonical display name per alias-dict
-    component.  Depends ONLY on the alias dictionary (same-as edges are
-    dictionary-internal and singletons fall back to their own id), so a
-    resumed run computes the identical map without re-seeing every
-    mention surface."""
-    sa = same_as_edges(alias_dict)
-    ents = alias_dict.select(F.col("entity_id").alias("node")).distinct()
-    canon = canonical_map(sa, ents).withColumnRenamed("node", "entity_id")
+def canonical_entities(alias_dict: DataFrame) -> DataFrame:
+    """(entity_id, canonical_id, dict_canonical): one row per alias-dict
+    entity — its component under the dictionary's same-as edges (the
+    min entity id; singletons map to themselves) and the component's
+    display name (min canonical over its members).
+
+    Depends ONLY on the alias dictionary, so one table serves every
+    consumer: the surface map, the node table, and a resumed run's
+    rebuild of nodes from disk, which never re-sees every mention
+    surface.  Ids outside the dictionary (minted 'X' ids) have no row
+    here and fall back to themselves at the join."""
+    ents = alias_dict.groupBy("entity_id").agg(F.min("canonical").alias("name"))
+    comp = canonical_map(same_as_edges(alias_dict),
+                         ents.select(F.col("entity_id").alias("node")))
     return (
-        alias_dict.select("entity_id", "canonical")
-        .join(canon, "entity_id", "left")
-        .withColumn("cid", F.coalesce("component", "entity_id"))
-        .groupBy("cid").agg(F.min("canonical").alias("dict_canonical"))
+        ents.join(comp.select(F.col("node").alias("entity_id"),
+                              F.col("component").alias("canonical_id")),
+                  "entity_id")
+        .select("entity_id", "canonical_id",
+                F.min("name").over(Window.partitionBy("canonical_id"))
+                .alias("dict_canonical"))
     )
 
 
-def nodes_from_linked(linked_mentions: DataFrame, canon_text: DataFrame) -> DataFrame:
+def nodes_from_linked(linked_mentions: DataFrame, canon: DataFrame) -> DataFrame:
     """Aggregate the canonical-entity node table from linked mentions.
 
-    canon_text is bounded by the alias dictionary (small by contract)
-    -> broadcast; the mention aggregate is a plain hash-agg on
-    canonical_id.
+    canon (canonical_entities) is bounded by the alias dictionary
+    (small by contract) -> broadcast; a component id is its min member,
+    so the id's own row carries the component's name.  The mention
+    aggregate is a plain hash-agg on canonical_id.
     """
+    names = canon.select(F.col("entity_id").alias("cid"), "dict_canonical")
     return (
         linked_mentions.groupBy("canonical_id")
         .agg(F.count(F.lit(1)).alias("mention_count"),
              F.min("text").alias("top_text"),
              F.mode("type").alias("type"))
-        .join(F.broadcast(canon_text),
+        .join(F.broadcast(names),
               F.col("canonical_id") == F.col("cid"), "left")
         .select(
             F.col("canonical_id").alias("entity_id"),
@@ -115,12 +131,31 @@ def nodes_from_linked(linked_mentions: DataFrame, canon_text: DataFrame) -> Data
     )
 
 
-def build_graph(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
-                cache_registry: list | None = None,
-                linking_strategy: str = "auto"):
-    """Linking -> canonicalization -> graph tables (no IO).
+@dataclass
+class Graph:
+    """build_graph's tables, all lazy, plus the caches behind them."""
+    triples: DataFrame   # (doc_id, sent_id, subj, pred, obj, ...)
+    linked: DataFrame    # mentions + entity_id, canonical_id
+    nodes: DataFrame     # (entity_id, canonical, type, mention_count)
+    edges: DataFrame     # (subj_id, pred, obj_id, doc_id, sent_id)
+    canon: DataFrame     # canonical_entities(alias_dict)
+    caches: list[DataFrame]
 
-    Returns (linked_mentions_with_canonical_id, nodes, edges).
+    def release(self) -> None:
+        """Unpersist every cache build_graph created."""
+        for df in self.caches:
+            df.unpersist()
+
+
+def build_graph(annotated: DataFrame,
+                alias_dict: DataFrame | Callable[[DataFrame], DataFrame],
+                linking_strategy: str = "auto") -> Graph:
+    """Annotated sentences -> mentions/triples -> linking ->
+    canonicalization -> graph tables (no IO).
+
+    ``annotated`` needs doc_id, sent_id, mentions and triples.
+    ``alias_dict`` is the alias dictionary, or a function from the
+    mention stream to one (a dictionary derived from the data).
 
     Everything expensive happens once at SURFACE grain (distinct
     normalized mention texts): link, canonicalize, resolve — the
@@ -130,31 +165,34 @@ def build_graph(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
     rows at 100 TB would OOM a forced broadcast), so AQE picks
     broadcast when the map is actually small and degrades to a shuffle
     join when it is not.  Only alias-dict-bounded sides are hinted.
+    The dictionary is canonicalized once (canonical_entities).
 
-    Caches created here are appended to cache_registry (if given) so
-    callers can unpersist after their writes complete.
+    Caches (lazy; they fill on the first action): the (doc_id,
+    sent_id, mentions, triples) projection of ``annotated``, which
+    every stream explodes from, so the kernel runs once however many
+    consumers read it; and the surface map, so linking runs once.
+    The caller owns them: ``Graph.release()`` unpersists both once the
+    caller's last action on the tables has run.  run_kg releases them
+    before it returns; the driver queries of ``__spark_entry__`` keep
+    them, because the driver consumes their lazy tables afterwards.
     """
-    from phonlp_spark.pipeline.linking import link_surfaces, norm_surface
+    mt = annotated.select("doc_id", "sent_id", "mentions", "triples").cache()
+    mentions, triples = mentions_df(mt), triples_df(mt)
+    if callable(alias_dict):
+        alias_dict = alias_dict(mentions)
+    canon = canonical_entities(alias_dict)
 
     m = mentions.withColumn("nsurf", norm_surface(F.col("text")))
-    surf_ent = link_surfaces(m.select("nsurf").distinct(), alias_dict,
-                             strategy=linking_strategy).cache()
-
-    # canonicalization at entity grain (bounded by |alias dict| +
-    # |distinct surfaces|)
-    sa = same_as_edges(alias_dict)
-    canon = (canonical_map(sa, surf_ent.select(F.col("entity_id").alias("node")))
-             .withColumnRenamed("node", "entity_id"))
     surf_map = (
-        surf_ent.join(canon, "entity_id", "left")
+        link_surfaces(m.select("nsurf").distinct(), alias_dict,
+                      strategy=linking_strategy)
+        .join(F.broadcast(canon.select("entity_id", "canonical_id")),
+              "entity_id", "left")
         .select("nsurf", "entity_id",
-                F.coalesce("component", "entity_id").alias("canonical_id"))
+                F.coalesce("canonical_id", "entity_id").alias("canonical_id"))
         .cache()
     )
-    if cache_registry is not None:
-        cache_registry += [surf_ent, surf_map]
-
-    linked_canon = m.join(surf_map, "nsurf", "left").drop("nsurf")
+    linked = m.join(surf_map, "nsurf", "left").drop("nsurf")
 
     edges = (
         triples
@@ -169,8 +207,8 @@ def build_graph(mentions: DataFrame, triples: DataFrame, alias_dict: DataFrame,
         .select("subj_id", "pred", "obj_id", "doc_id", "sent_id")
     )
 
-    nodes = nodes_from_linked(linked_canon, dict_canonical_names(alias_dict))
-    return linked_canon, nodes, edges
+    return Graph(triples, linked, nodes_from_linked(linked, canon), edges,
+                 canon, [mt, surf_map])
 
 
 def run_kg(
@@ -233,6 +271,8 @@ def run_kg(
 
     sentences = split_sentences(todo.select("doc_id", "spans"))
     annotated = annotate_sentences_df(sentences, salt_partitions).cache()
+    graph = build_graph(annotated, alias_dict,
+                        linking_strategy=linking_strategy)
 
     # bucket is a pure function of doc_id — recompute it as an
     # expression on every output stream instead of joining a
@@ -241,61 +281,49 @@ def run_kg(
         return df.withColumn(
             "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
 
-    ann = with_bucket(annotations_long(annotated))
-    # cache the narrow mention/triple streams: the linking + graph
-    # plans reference them repeatedly and would otherwise re-explode
-    # the annotation arrays once per consumer
-    mentions = mentions_df(annotated).cache()
-    triples = triples_df(annotated).cache()
-    caches = [mentions, triples]
+    try:
+        # writes (bucket-partitioned; dynamic overwrite = idempotent re-run)
+        for table, df in (("annotations", annotations_long(annotated)),
+                          ("mentions", graph.linked),
+                          ("triples", graph.triples),
+                          ("edges", graph.edges)):
+            with_bucket(df).write.mode("overwrite").partitionBy("bucket") \
+                .parquet(f"{out_dir}/{table}")
+        # nodes is GLOBAL and non-partitioned: on a resumed run the
+        # in-memory graph covers only recomputed buckets, so rebuild it
+        # from the full on-disk mentions table (all buckets) after the
+        # per-bucket writes commit — otherwise a partial resume would
+        # silently replace the table with a subset-derived one.
+        nodes_from_linked(spark.read.parquet(f"{out_dir}/mentions"),
+                          graph.canon) \
+            .write.mode("overwrite").parquet(f"{out_dir}/nodes")
 
-    linked_canon, _nodes, edges = build_graph(
-        mentions, triples, alias_dict, cache_registry=caches,
-        linking_strategy=linking_strategy)
-
-    # writes (bucket-partitioned; dynamic overwrite = idempotent re-run)
-    ann.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/annotations")
-    with_bucket(linked_canon).write.mode("overwrite").partitionBy("bucket") \
-        .parquet(f"{out_dir}/mentions")
-    with_bucket(triples).write.mode("overwrite").partitionBy("bucket") \
-        .parquet(f"{out_dir}/triples")
-    with_bucket(edges).write.mode("overwrite").partitionBy("bucket") \
-        .parquet(f"{out_dir}/edges")
-    # nodes is GLOBAL and non-partitioned: on a resumed run the
-    # in-memory linked_canon covers only recomputed buckets, so rebuild
-    # it from the full on-disk mentions table (all buckets) after the
-    # per-bucket writes commit — otherwise a partial resume would
-    # silently replace the table with a subset-derived one.
-    nodes_full = nodes_from_linked(
-        spark.read.parquet(f"{out_dir}/mentions"),
-        dict_canonical_names(alias_dict))
-    nodes_full.write.mode("overwrite").parquet(f"{out_dir}/nodes")
-
-    # per-bucket lineage metrics
-    stats = (
-        todo.groupBy("bucket").agg(F.count(F.lit(1)).alias("docs"))
-        .join(with_bucket(annotated.select("doc_id", F.size("triples").alias("nt")))
-              .groupBy("bucket").agg(
-                  F.count(F.lit(1)).alias("sentences"),
-                  F.sum("nt").alias("triples")), "bucket", "left")
-        .fillna(0, ["sentences", "triples"])
-        .collect()
-    )
-    wall_ms = int((time.time() - t0) * 1000)
-    manifest_rows = [
-        (run_id, int(r["bucket"]), "done", int(r["docs"]), int(r["sentences"]),
-         int(r["triples"]), wall_ms,
-         prior_attempts.get(int(r["bucket"]), 0) + 1, fp, n_buckets)
-        for r in stats
-    ]
-    spark.createDataFrame(manifest_rows, ", ".join(
-        f"{c} {'string' if c in ('run_id', 'status', 'input_fingerprint') else 'long'}"
-        for c in MANIFEST_COLS
-    )).write.mode("append").parquet(f"{out_dir}/manifest")
-
-    annotated.unpersist()
-    for df in caches:  # release executor storage memory for later jobs
-        df.unpersist()
+        # per-bucket lineage metrics
+        stats = (
+            todo.groupBy("bucket").agg(F.count(F.lit(1)).alias("docs"))
+            .join(with_bucket(annotated.select("doc_id",
+                                               F.size("triples").alias("nt")))
+                  .groupBy("bucket").agg(
+                      F.count(F.lit(1)).alias("sentences"),
+                      F.sum("nt").alias("triples")), "bucket", "left")
+            .fillna(0, ["sentences", "triples"])
+            .collect()
+        )
+        wall_ms = int((time.time() - t0) * 1000)
+        manifest_rows = [
+            (run_id, int(r["bucket"]), "done", int(r["docs"]),
+             int(r["sentences"]), int(r["triples"]), wall_ms,
+             prior_attempts.get(int(r["bucket"]), 0) + 1, fp, n_buckets)
+            for r in stats
+        ]
+        spark.createDataFrame(manifest_rows, ", ".join(
+            f"{c} {'string' if c in ('run_id', 'status', 'input_fingerprint') else 'long'}"
+            for c in MANIFEST_COLS
+        )).write.mode("append").parquet(f"{out_dir}/manifest")
+    finally:
+        # release executor storage memory for later jobs
+        annotated.unpersist()
+        graph.release()
     totals = {
         "docs": sum(r["docs"] for r in stats),
         "sentences": sum(r["sentences"] or 0 for r in stats),

@@ -113,33 +113,64 @@ def test_graph_joins_survive_no_broadcast(spark, out_dir):  # noqa: F811
     """With auto-broadcast disabled (the 100-TB shape: distinct
     surfaces exceed any broadcast threshold) the surface-map joins must
     degrade to shuffle joins and produce identical edges."""
-    from phonlp_spark.pipeline.annotate import (
-        annotate_sentences_df, mentions_df, triples_df)
+    from phonlp_spark.pipeline.annotate import annotate_sentences_df
     from phonlp_spark.pipeline.ingest import split_sentences
     from phonlp_spark.pipeline.materialize import build_graph
 
     docs, alias = _inputs(spark, n=60)
     ann = annotate_sentences_df(split_sentences(docs)).cache()
-    mentions, triples = mentions_df(ann), triples_df(ann)
 
-    def edge_sig():
-        _l, nodes, edges = build_graph(mentions, triples, alias)
+    def edge_sig(graph):
         cols = ["subj_id", "pred", "obj_id", "doc_id"]
-        return (edges.count(), nodes.count(),
-                edges.select(F.bit_xor(F.xxhash64(*cols)).alias("h"))
+        return (graph.edges.count(), graph.nodes.count(),
+                graph.edges.select(F.bit_xor(F.xxhash64(*cols)).alias("h"))
                 .collect()[0]["h"])
 
     threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    baseline = edge_sig()
+    graphs = [build_graph(ann, alias)]
     try:
+        baseline = edge_sig(graphs[0])
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        _l, _n, edges = build_graph(mentions, triples, alias)
-        plan = edges._jdf.queryExecution().executedPlan().toString()
+        graphs.append(build_graph(ann, alias))
+        plan = graphs[1].edges._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert edge_sig() == baseline
+        assert edge_sig(graphs[1]) == baseline
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        for g in graphs:
+            g.release()
         ann.unpersist()
+
+
+def test_run_kg_canonicalizes_once(spark, out_dir, monkeypatch):  # noqa: F811
+    """Canonicalization depends only on the alias dictionary, so one
+    run computes its connected components exactly once."""
+    from phonlp_spark.pipeline import cc
+
+    calls = []
+    orig = cc.connected_components
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(cc, "connected_components", counted)
+    docs, alias = _inputs(spark, n=30)
+    run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    assert len(calls) == 1
+
+
+def test_run_kg_leaves_nothing_persisted(spark, out_dir):  # noqa: F811
+    """Every cache and checkpoint run_kg creates is released before it
+    returns."""
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs()
+                   .keySet().toArray())
+
+    docs, alias = _inputs(spark, n=30)
+    before = persisted()
+    run_kg(spark, docs, alias, out_dir, n_buckets=4)
+    assert persisted() <= before
 
 
 def test_dedup_pre_stage_skips_kernel_for_duplicates(spark, tmp_path):  # noqa: F811

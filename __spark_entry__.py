@@ -15,6 +15,7 @@ order-insensitive value hash matches bit-for-bit.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,6 +106,15 @@ def _graph(spark: SparkSession, sf_dir: str):
     return build_graph(
         _annotated(spark, sf_dir),
         lambda mentions: build_alias_dict(spark, _alias_names(mentions)))
+
+
+def _tagged_union(variants, cols: list[str]) -> DataFrame:
+    """One table of several (variant, frame) outputs: queries() is
+    capped at 50 entries, so parameter variants of one operator share
+    an entry via a variant tag."""
+    return reduce(DataFrame.unionByName,
+                  [df.select(F.lit(m).alias("variant"), *cols)
+                   for m, df in variants])
 
 
 _CENTS_CACHE: dict[str, list] = {}
@@ -667,9 +677,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         4 bands of 2), 'wide' = the production-sized sketch (32 hashes,
         8 bands of 4) — same code path, same oracle generator, proving
         the sketch constants are arguments, not baked in.  (Merged from
-        the r3 dedup_lsh_pairs / dedup_lsh_pairs_wide entries: the
-        driver gate sweeps at most 50 queries() entries, so parameter
-        variants share one entry via a variant tag.)
+        the r3 dedup_lsh_pairs / dedup_lsh_pairs_wide entries; see
+        _tagged_union.)
 
         Both variants band over ONE shared 32-hash signature
         aggregate: _h64's salt is the hash index, so the base sketch's
@@ -678,11 +687,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from phonlp_spark.ops.fanout import fan_out
         sig = dedup._signatures_from_shingles(
             dedup.token_shingles(fan_out(_docs(s, d))), 32)
-        base = dedup.lsh_pairs_from_signatures(sig, n_minhash=8, band=2) \
-            .select(F.lit("base").alias("variant"), "a", "b")
-        wide = dedup.lsh_pairs_from_signatures(sig, n_minhash=32, band=4) \
-            .select(F.lit("wide").alias("variant"), "a", "b")
-        return base.unionByName(wide)
+        return _tagged_union(
+            (("base", dedup.lsh_pairs_from_signatures(sig, n_minhash=8, band=2)),
+             ("wide", dedup.lsh_pairs_from_signatures(sig, n_minhash=32, band=4))),
+            ["a", "b"])
     q["dedup_lsh_pairs"] = dedup_lsh_pairs
     q["dedup_simhash"] = lambda s, d: dedup.simhash(_docs(s, d))
     q["dedup_simhash_pairs"] = lambda s, d: dedup.simhash_pairs(
@@ -692,80 +700,69 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["dedup_lsh_verified"] = lambda s, d: dedup.lsh_verified_pairs(
         _docs(s, d), min_pct=5)
 
-    # embedding-cosine near-dup (dedup family member): LSH-bucketed /
+    # embedding-cosine near-dup (dedup family member): single-table LSH /
     # OR-amplified / trained-IVF candidates, exact-cosine threshold
     # (300 fits the synthetic embeddings' similarity range; production
     # uses ~950), all three variants in one hash-checked table
-    def dedup_embedding(s, d):
+    def near_dup_variants(s, d):
         emb = _table(s, d, "embeddings")
-        out = None
-        for m, df in (
-                ("lsh_p4", similarity.embedding_near_dups(
-                    emb, min_cos_x1000=300)),
-                ("lsh_multi", similarity.embedding_near_dups_multi(
-                    emb, min_cos_x1000=300)),
-                ("ivf_trained", similarity.embedding_near_dups_ivf(
-                    emb, min_cos_x1000=300,
-                    cents_rows=_trained_cents(s, d)))):
-            df = df.select(F.lit(m).alias("variant"), "a", "b", "cos_x1000")
-            out = df if out is None else out.unionByName(df)
-        return out
-    q["dedup_embedding"] = dedup_embedding
+        return (
+            ("lsh_p4", similarity.embedding_near_dups_multi(
+                emb, min_cos_x1000=300, n_tables=1, planes=4)),
+            ("lsh_multi", similarity.embedding_near_dups_multi(
+                emb, min_cos_x1000=300)),
+            ("ivf_trained", similarity.embedding_near_dups_ivf(
+                emb, min_cos_x1000=300, cents_rows=_trained_cents(s, d))))
+    q["dedup_embedding"] = lambda s, d: _tagged_union(
+        near_dup_variants(s, d), ["a", "b", "cos_x1000"])
 
     # ---- similarity search ----
+    qids = list(range(10))
+    topk_cols = ["query_id", "neighbor_id", "rank"]
     q["ann_cosine_topk"] = lambda s, d: similarity.cosine_topk(
-        _table(s, d, "embeddings"), query_ids=list(range(10)), k=5)
+        _table(s, d, "embeddings"), query_ids=qids, k=5)
     q["ann_lsh_buckets"] = lambda s, d: similarity.lsh_buckets(
         _table(s, d, "embeddings"))
 
-    def ann_lsh_topk(s, d):
-        """Hyperplane-LSH ANN top-k, four parameterizations in one
-        table: 'p4' (4 planes), 'p6' (6 planes — production bucket
+    def lsh_topk_variants(s, d):
+        """Hyperplane-LSH ANN top-k, four parameterizations: 'p4' (one
+        table, 4 planes), 'p6' (one table, 6 planes — production bucket
         granularity), 'multi' (4 tables x 6 planes, OR-amplified),
         'multiprobe' (multi + query-side Hamming-1 probing — the
-        variant that lifts hyperplane recall to a defensible level,
-        VERDICT r4 next-round #5)."""
+        variant that lifts hyperplane recall to a defensible level)."""
         emb = _table(s, d, "embeddings")
-        qids = list(range(10))
-        out = None
-        for m, df in (
-                ("p4", similarity.ann_topk_lsh(emb, qids, k=5)),
-                ("p6", similarity.ann_topk_lsh(emb, qids, k=5, planes=6)),
-                ("multi", similarity.ann_topk_lsh_multi(
-                    emb, qids, k=5, n_tables=4, planes=6)),
-                ("multiprobe", similarity.ann_topk_lsh_multiprobe(
-                    emb, qids, k=5, n_tables=4, planes=6))):
-            df = df.select(F.lit(m).alias("variant"),
-                           "query_id", "neighbor_id", "rank")
-            out = df if out is None else out.unionByName(df)
-        return out
-    q["ann_lsh_topk"] = ann_lsh_topk
+        return (
+            ("p4", similarity.ann_topk_lsh_multi(
+                emb, qids, k=5, n_tables=1, planes=4)),
+            ("p6", similarity.ann_topk_lsh_multi(
+                emb, qids, k=5, n_tables=1, planes=6)),
+            ("multi", similarity.ann_topk_lsh_multi(
+                emb, qids, k=5, n_tables=4, planes=6)),
+            ("multiprobe", similarity.ann_topk_lsh_multiprobe(
+                emb, qids, k=5, n_tables=4, planes=6)))
+    q["ann_lsh_topk"] = lambda s, d: _tagged_union(
+        lsh_topk_variants(s, d), topk_cols)
 
     # IVF: 'seeded' = literal seeded centroids; 'trained' = in-engine
     # integer-quantized k-means (deterministic, oracle-mirrored) — the
     # production index the seeded variant stands in for
     def ann_ivf_cells(s, d):
         emb = _table(s, d, "embeddings")
-        seeded = similarity.ivf_cells(emb) \
-            .select(F.lit("seeded").alias("variant"), "vec_id", "cell")
-        trained = similarity.ivf_cells_trained(
-            emb, cents_rows=_trained_cents(s, d)) \
-            .select(F.lit("trained").alias("variant"), "vec_id", "cell")
-        return seeded.unionByName(trained)
+        return _tagged_union(
+            (("seeded", similarity.ivf_cells(emb)),
+             ("trained", similarity.ivf_cells_trained(
+                 emb, cents_rows=_trained_cents(s, d)))),
+            ["vec_id", "cell"])
     q["ann_ivf_cells"] = ann_ivf_cells
 
-    def ann_ivf_topk(s, d):
+    def ivf_topk_variants(s, d):
         emb = _table(s, d, "embeddings")
-        qids = list(range(10))
-        seeded = similarity.ann_topk_ivf(emb, qids, k=5) \
-            .select(F.lit("seeded").alias("variant"),
-                    "query_id", "neighbor_id", "rank")
-        trained = similarity.ann_topk_ivf_trained(
-            emb, qids, k=5, n_probe=2, cents_rows=_trained_cents(s, d)) \
-            .select(F.lit("trained").alias("variant"),
-                    "query_id", "neighbor_id", "rank")
-        return seeded.unionByName(trained)
-    q["ann_ivf_topk"] = ann_ivf_topk
+        return (
+            ("seeded", similarity.ann_topk_ivf(emb, qids, k=5)),
+            ("trained", similarity.ann_topk_ivf_trained(
+                emb, qids, k=5, n_probe=2, cents_rows=_trained_cents(s, d))))
+    q["ann_ivf_topk"] = lambda s, d: _tagged_union(
+        ivf_topk_variants(s, d), topk_cols)
 
     def quality_recall(s, d):
         """EVERY candidate-generation / retrieval recall gate in one
@@ -782,36 +779,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
           them).
         """
         emb = _table(s, d, "embeddings")
-        qids = list(range(10))
-        cents = _trained_cents(s, d)
         exact = similarity.cosine_topk(emb, qids, k=5)
-        out = None
-        for m, df in (
-                ("lsh_p4", similarity.ann_topk_lsh(emb, qids, k=5)),
-                ("lsh_p6", similarity.ann_topk_lsh(emb, qids, k=5, planes=6)),
-                ("ivf_seeded", similarity.ann_topk_ivf(emb, qids, k=5)),
-                ("lsh_multi", similarity.ann_topk_lsh_multi(
-                    emb, qids, k=5, n_tables=4, planes=6)),
-                ("lsh_multiprobe", similarity.ann_topk_lsh_multiprobe(
-                    emb, qids, k=5, n_tables=4, planes=6)),
-                ("ivf_trained", similarity.ann_topk_ivf_trained(
-                    emb, qids, k=5, n_probe=2, cents_rows=cents))):
-            row = similarity.recall_vs_exact(exact, df, m) \
-                .select(F.lit("ann").alias("family"), "*")
-            out = row if out is None else out.unionByName(row)
-
-        hits = dedup.lsh_verified_pairs(_docs(s, d), min_pct=5) \
-            .agg(F.count(F.lit(1)).alias("hits"))
-        total = dedup.jaccard_pairs(_docs(s, d), min_pct=5) \
-            .agg(F.count(F.lit(1)).alias("total"))
-        out = out.unionByName(
-            hits.crossJoin(total).select(
-                F.lit("dedup_text").alias("family"),
-                F.lit("lsh_verified").alias("method"),
-                F.col("hits").cast("bigint").alias("hits"),
-                F.col("total").cast("bigint").alias("total"),
-                F.expr("CAST(hits * 1000 DIV greatest(total, 1) AS INT)")
-                .alias("recall_permille")))
+        rows = [("ann", similarity.recall_vs_exact(exact, df, f"{pre}_{m}"))
+                for pre, variants in (("lsh", lsh_topk_variants(s, d)),
+                                      ("ivf", ivf_topk_variants(s, d)))
+                for m, df in variants]
+        rows.append(("dedup_text", similarity.recall_row(
+            dedup.lsh_verified_pairs(_docs(s, d), min_pct=5),
+            dedup.jaccard_pairs(_docs(s, d), min_pct=5), "lsh_verified")))
 
         left = emb.select(F.col("vec_id").alias("a"),
                           F.col("embedding").alias("va"))
@@ -819,26 +794,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                            F.col("embedding").alias("vb"))
         cos = similarity.dot(F.col("va"), F.col("vb")) / (
             similarity.norm(F.col("va")) * similarity.norm(F.col("vb")))
-        e_total = (left.join(right, F.col("a") < F.col("b"))
-                   .filter(F.round(cos * 1000) >= 300)
-                   .agg(F.count(F.lit(1)).alias("total")))
-        for m, appr in (
-                ("lsh_p4", similarity.embedding_near_dups(
-                    emb, min_cos_x1000=300)),
-                ("lsh_multi", similarity.embedding_near_dups_multi(
-                    emb, min_cos_x1000=300)),
-                ("ivf_trained", similarity.embedding_near_dups_ivf(
-                    emb, min_cos_x1000=300, cents_rows=cents))):
-            row = (appr.agg(F.count(F.lit(1)).alias("hits"))
-                   .crossJoin(e_total)
-                   .select(F.lit("dedup_embedding").alias("family"),
-                           F.lit(m).alias("method"),
-                           F.col("hits").cast("bigint").alias("hits"),
-                           F.col("total").cast("bigint").alias("total"),
-                           F.expr("CAST(hits * 1000 DIV greatest(total, 1)"
-                                  " AS INT)").alias("recall_permille")))
-            out = out.unionByName(row)
-        return out
+        e_pairs = (left.join(right, F.col("a") < F.col("b"))
+                   .filter(F.round(cos * 1000) >= 300))
+        rows += [("dedup_embedding", similarity.recall_row(appr, e_pairs, m))
+                 for m, appr in near_dup_variants(s, d)]
+        return reduce(DataFrame.unionByName,
+                      [r.select(F.lit(fam).alias("family"), "*")
+                       for fam, r in rows])
     q["quality_recall"] = quality_recall
 
     # ---- text analysis ----
@@ -1192,14 +1154,14 @@ _COS = ("list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
 
 def _q_score(v: str, c: str) -> str:
     """2*v.c - |c|^2 on the x1000 integer grid — exact in doubles, so
-    DuckDB's double equals Spark's long (similarity._score_q)."""
+    DuckDB's double equals Spark's long (similarity._scores_q)."""
     return (f"2*list_dot_product(CAST({v} AS DOUBLE[]), CAST({c} AS DOUBLE[]))"
             f" - list_dot_product(CAST({c} AS DOUBLE[]), CAST({c} AS DOUBLE[]))")
 
 
 def _kmeans_ctes(p: str = "km", n_cells: int = 8, iters: int = 3,
                  sample_mod: int = 2, seed: int = 11) -> tuple[list[str], str]:
-    """DuckDB CTE chain mirroring similarity.kmeans_centroids_q: unrolled
+    """DuckDB CTE chain mirroring similarity.trained_centroids_rows: unrolled
     Lloyd's rounds on quantized vectors, floor(sum/count) means, empty
     cells keeping their previous centroid.  Returns (ctes, final_name)."""
     from phonlp_spark.ops.similarity import seeded_centroids

@@ -22,10 +22,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
+    from bench import SF_DIR
     ap = argparse.ArgumentParser()
     ap.add_argument("query", nargs="?", default=None)
-    ap.add_argument("--sf-dir", default=os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
+    ap.add_argument("--sf-dir", default=SF_DIR)
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--explain-out", default=None)
     ap.add_argument("--no-run", action="store_true",

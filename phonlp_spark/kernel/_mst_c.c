@@ -9,8 +9,8 @@
  *   int phonlp_mst_single_root(const double *scores, int64_t n,
  *                              int64_t *out_heads);
  * scores: row-major n*n, scores[dep*n + head], row/col 0 = ROOT.
- * Returns 0 on success, nonzero on allocation failure (caller falls
- * back to the Python implementation).
+ * Returns 0 on success, nonzero on allocation failure or NaN scores
+ * (caller falls back to the Python implementation).
  *
  * Only matters for throughput: dependency decode runs this per
  * sentence (n <= 257), and the Python/numpy version's per-call
@@ -65,7 +65,8 @@ static double pairwise_sum(const double *a, int64_t n)
 }
 
 /* numpy argmax over one row: first occurrence of the maximum.
- * Matches np.argmax exactly for finite/-inf inputs (no NaNs here). */
+ * Matches np.argmax exactly for finite/-inf inputs; NaN matrices never
+ * get here (phonlp_mst_single_root rejects them). */
 static int64_t row_argmax(const double *row, int64_t n)
 {
     int64_t best = 0;
@@ -231,6 +232,12 @@ int phonlp_mst_single_root(const double *scores, int64_t n,
     double *base = malloc((size_t)(n * n) * sizeof(double));
     if (!base) return 1;
     prepare(scores, n, base);
+    /* np.argmax picks the first NaN, which row_argmax cannot
+     * replicate: NaN scores (e.g. a checkpoint whose logits hit
+     * inf - inf) go back to the numpy path */
+    for (int64_t i = 0; i < n * n; i++) {
+        if (isnan(base[i])) { free(base); return 2; }
+    }
     int rc = solve(base, n, out_heads);
     if (rc != 0) { free(base); return rc; }
 

@@ -38,24 +38,47 @@ NEG_INF = -np.inf
 
 _C_FN = None
 _C_TRIED = False
+_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_mst_c.c")
+
+
+def _cache_dir() -> str:
+    """Per-user build cache for the native solver: a 0700 directory in
+    the temp dir, so no other user can plant or swap the library."""
+    d = os.path.join(tempfile.gettempdir(), f"phonlp_mst-{os.getuid()}")
+    os.makedirs(d, mode=0o700, exist_ok=True)
+    return d
+
+
+def _trusted(path: str) -> bool:
+    """True when ``path`` belongs to the current uid and neither group
+    nor other can write to it — the precondition for dlopen-ing it."""
+    st = os.stat(path)
+    return st.st_uid == os.getuid() and not st.st_mode & 0o022
+
+
+def _so_path() -> str:
+    with open(_SRC, "rb") as f:
+        digest = hashlib.md5(f.read()).hexdigest()[:16]
+    return os.path.join(_cache_dir(), f"phonlp_mst_{digest}.so")
 
 
 def _load_native():
-    """Compile (once per host, cached in the temp dir keyed on the
-    source digest) and ctypes-load the C solver; None when the host has
-    no C compiler.  Concurrent workers race harmlessly: each compiles
-    to a private name and os.replace is atomic."""
-    src = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_mst_c.c")
+    """Compile (once per user and source digest, see _cache_dir) and
+    ctypes-load the C solver; None when the host has no C compiler or
+    the cached library or its directory fails the _trusted check.
+    Concurrent workers race harmlessly: each compiles to a private name
+    and os.replace is atomic."""
     try:
-        with open(src, "rb") as f:
-            digest = hashlib.md5(f.read()).hexdigest()[:16]
-        so = os.path.join(tempfile.gettempdir(), f"phonlp_mst_{digest}.so")
+        so = _so_path()
         if not os.path.exists(so):
             tmp = f"{so}.tmp{os.getpid()}"
             subprocess.run(
-                ["cc", "-O2", "-shared", "-fPIC", "-o", tmp, src],
+                ["cc", "-O2", "-shared", "-fPIC", "-o", tmp, _SRC],
                 check=True, capture_output=True)
+            os.chmod(tmp, 0o700)
             os.replace(tmp, so)
+        if not (_trusted(os.path.dirname(so)) and _trusted(so)):
+            return None
         lib = ctypes.CDLL(so)
         fn = lib.phonlp_mst_single_root
         fn.restype = ctypes.c_int
@@ -161,7 +184,8 @@ def mst_single_root(scores: np.ndarray) -> np.ndarray:
 
     Dispatches to the bit-compatible C solver when available (see
     module docstring); the numpy path below is the fallback and the
-    differential-test oracle."""
+    differential-test oracle; the C solver also hands back NaN score
+    matrices, whose np.argmax tie rule it cannot replicate."""
     fn = _native_fn()
     if fn is not None:
         s = np.ascontiguousarray(scores, dtype=np.float64)

@@ -13,7 +13,9 @@ Scale shapes:
   dropping ultra-frequent shingles (stop-shingles);
 - MinHash/LSH: signatures are per-row aggregates (no shuffle), banding
   joins only collide candidates — the 100TB-safe near-dup pattern;
-- SimHash: per-row bit aggregate, one groupBy on the 16-bit key.
+- SimHash: per-row bit aggregate, banded the same way.
+Both bandings generate pairs with ops.similarity.bucket_pairs, the
+guarded bucket self-join the embedding near-dup operators share.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from phonlp_spark.ops.fanout import fan_out, fan_width
+from phonlp_spark.ops.similarity import bucket_pairs, drop_hot_buckets
 
 # Default sketch sizes — sized for the sandbox fixtures.  All operators
 # take these as ARGUMENTS so a 100-TB corpus runs e.g. 128 minhashes /
@@ -73,6 +76,26 @@ def _shingles_wide(docs: DataFrame, n: int, text_col: str,
     return sh.repartition(w, "shingle")
 
 
+def _guarded_shingles(sh: DataFrame, max_shingle_freq: int
+                      ) -> tuple[DataFrame, DataFrame]:
+    """(shingle rows minus stop-shingles, per-key set sizes ``sz``): the
+    stop-shingle skew guard is drop_hot_buckets keyed on the shingle,
+    applied before any pair is formed."""
+    shf = drop_hot_buckets(sh, ["shingle"], max_shingle_freq)
+    return shf, shf.groupBy("key").agg(F.count(F.lit(1)).alias("sz"))
+
+
+def _jaccard_at_least(pairs: DataFrame, min_pct: int) -> DataFrame:
+    """Integer-exact Jaccard >= min_pct/100 on (a, b, common, na, nb):
+    100*common >= min_pct*(na+nb-common), float-free so oracles hash
+    identically."""
+    return (
+        pairs.filter(F.lit(100) * F.col("common")
+                     >= F.lit(min_pct) * (F.col("na") + F.col("nb") - F.col("common")))
+        .select("a", "b", "common", "na", "nb")
+    )
+
+
 def jaccard_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
                   text_col: str = "text", key_col: str = "doc_id",
                   max_shingle_freq: int = 1000) -> DataFrame:
@@ -94,11 +117,8 @@ def jaccard_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
     i.e. on the scan stage's 1-2 tasks (281 s at ~1.5 busy cores at
     sf1.0; see plans/r07/dedup_jaccard_before.txt).
     """
-    sh = _shingles_wide(docs, n, text_col, key_col)
-    hot = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")) \
-            .filter(F.col("df") > max_shingle_freq).select("shingle")
-    shf = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = shf.groupBy("key").agg(F.count(F.lit(1)).alias("sz"))
+    shf, sizes = _guarded_shingles(_shingles_wide(docs, n, text_col, key_col),
+                                   max_shingle_freq)
     # Attach each doc's shingle-set size to its shingle rows BEFORE
     # posting lists are collected: pairs then emerge as (a, b, na, nb)
     # directly and the candidate table never joins anything downstream
@@ -138,11 +158,7 @@ def jaccard_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
                 F.col("na").cast("bigint").alias("na"),
                 F.col("nb").cast("bigint").alias("nb"))
     )
-    return (
-        pairs.filter(F.lit(100) * F.col("common")
-                     >= F.lit(min_pct) * (F.col("na") + F.col("nb") - F.col("common")))
-        .select("a", "b", "common", "na", "nb")
-    )
+    return _jaccard_at_least(pairs, min_pct)
 
 
 def _signatures_from_shingles(sh: DataFrame, n_minhash: int) -> DataFrame:
@@ -175,31 +191,27 @@ def lsh_pairs_from_signatures(sig: DataFrame, n_minhash: int,
     sketch over the same shingles — so parameter variants can share one
     signature aggregate (dedup_lsh_pairs runs 8/2 and 32/4 over a
     single 32-hash table: 32 instead of 40 md5 evaluations per shingle
-    row, one partial aggregate instead of two).
-
-    Banding is ONE posexplode projection: a per-band select + union
-    would recompute the signature aggregate once per band; the single
-    subtree is also what lets the self-join's two identical exchanges
-    share via ReusedExchange."""
-    bucket_cols = [
+    row, one partial aggregate instead of two)."""
+    return _band_pairs(sig, [
         F.md5(F.concat_ws("_", *[F.col(f"mh{b * band + j}").cast("string")
                                  for j in range(band)]))
-        for b in range(n_minhash // band)
-    ]
+        for b in range(n_minhash // band)])
+
+
+def _band_pairs(sig: DataFrame, band_keys: list[Column],
+                max_bucket_size: int | None = None,
+                carry: tuple[str, ...] = ()) -> DataFrame:
+    """Banding candidates: docs of ``sig`` sharing any (band, bucket).
+
+    ONE posexplode projection: a per-band select + union would
+    recompute the signature aggregate once per band; the single subtree
+    is also what lets the self-join's two identical exchanges share via
+    ReusedExchange."""
     buck = sig.select(
-        "key", F.posexplode(F.array(*bucket_cols)).alias("band", "bucket"))
-    return (
-        buck.alias("l").join(buck.alias("r"), ["band", "bucket"])
-        .filter(F.col("l.key") < F.col("r.key"))
-        .select(F.col("l.key").alias("a"), F.col("r.key").alias("b"))
-        .distinct()
-    )
-
-
-def _lsh_pairs_from_shingles(sh: DataFrame, n_minhash: int,
-                             band: int) -> DataFrame:
-    return lsh_pairs_from_signatures(
-        _signatures_from_shingles(sh, n_minhash), n_minhash, band)
+        "key", F.posexplode(F.array(*band_keys)).alias("band", "bucket"),
+        *carry)
+    return bucket_pairs(buck, ["band", "bucket"], max_bucket_size,
+                        id_col="key", carry=carry)
 
 
 def lsh_candidate_pairs(docs: DataFrame, n: int = 3, text_col: str = "text",
@@ -207,15 +219,15 @@ def lsh_candidate_pairs(docs: DataFrame, n: int = 3, text_col: str = "text",
                         n_minhash: int = N_MINHASH,
                         band: int = LSH_BAND) -> DataFrame:
     """Near-dup candidates: docs sharing any LSH band bucket."""
-    return _lsh_pairs_from_shingles(
-        token_shingles(fan_out(docs), n, text_col, key_col), n_minhash, band)
+    return lsh_pairs_from_signatures(
+        minhash_signatures(docs, n, text_col, key_col, n_minhash),
+        n_minhash, band)
 
 
 def lsh_verified_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
                        text_col: str = "text", key_col: str = "doc_id",
                        n_minhash: int = N_MINHASH, band: int = LSH_BAND,
-                       max_shingle_freq: int = 1000,
-                       cache_registry: list | None = None) -> DataFrame:
+                       max_shingle_freq: int = 1000) -> DataFrame:
     """The production near-dup composition: LSH banding GENERATES
     candidates, exact n-gram Jaccard VERIFIES only those pairs.
 
@@ -228,37 +240,25 @@ def lsh_verified_pairs(docs: DataFrame, n: int = 3, min_pct: int = 5,
     LSH failed to collide — measured by the dedup family's recall
     story, same as ann_recall for ANN).
 
-    ``cache_registry``: the plan references the shingle table from four
-    consumers (signatures, stop-shingle scan, sizes, intersection).
-    Since r7 all four hang off one canonical shingle exchange (see
-    _shingles_wide) that Spark's exchange reuse materializes once per
-    query, so re-shingling no longer multiplies with consumers even
-    uncached.  Pass a list to additionally persist the shingles and
-    receive the handle for unpersisting after the action; default None
-    keeps the operator stateless.
+    The plan references the shingle table from four consumers
+    (signatures, stop-shingle scan, sizes, intersection); all four hang
+    off one canonical shingle exchange (see _shingles_wide) that
+    Spark's exchange reuse materializes once per query.
     """
     sh = _shingles_wide(docs, n, text_col, key_col)
-    if cache_registry is not None:
-        sh = sh.persist()
-        cache_registry.append(sh)
-    cand = _lsh_pairs_from_shingles(sh, n_minhash, band)
-    hot = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")) \
-            .filter(F.col("df") > max_shingle_freq).select("shingle")
-    sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = sh.groupBy("key").agg(F.count(F.lit(1)).alias("sz"))
+    cand = lsh_pairs_from_signatures(
+        _signatures_from_shingles(sh, n_minhash), n_minhash, band)
+    sh, sizes = _guarded_shingles(sh, max_shingle_freq)
     common = (
         cand.join(sh.select(F.col("key").alias("a"), "shingle"), "a")
         .join(sh.select(F.col("key").alias("b"), "shingle"), ["b", "shingle"])
         .groupBy("a", "b").agg(F.count(F.lit(1)).alias("common"))
     )
-    return (
+    return _jaccard_at_least(
         common
         .join(sizes.withColumnRenamed("key", "a").withColumnRenamed("sz", "na"), "a")
-        .join(sizes.withColumnRenamed("key", "b").withColumnRenamed("sz", "nb"), "b")
-        .filter(F.lit(100) * F.col("common")
-                >= F.lit(min_pct) * (F.col("na") + F.col("nb") - F.col("common")))
-        .select("a", "b", "common", "na", "nb")
-    )
+        .join(sizes.withColumnRenamed("key", "b").withColumnRenamed("sz", "nb"), "b"),
+        min_pct)
 
 
 def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
@@ -277,9 +277,8 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     a cross product.
 
     ``max_bucket_size``: (band, chunk) groups holding more rows are
-    dropped before the self-join (hot-bucket guard — a corpus of
-    near-identical documents collapses into one chunk value and would
-    go quadratic there; same pattern as jaccard_pairs' stop-shingles).
+    dropped before the self-join (bucket_pairs' hot-bucket guard — a
+    corpus of near-identical documents collapses into one chunk value).
     A dropped band costs candidates only for pairs whose OTHER shared
     bands are also hot, so the pigeonhole completeness claim degrades
     gracefully; the oracle SQL mirrors the cap.
@@ -288,29 +287,16 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     assert max_hamming <= n_bands - 1, (
         "completeness needs max_hamming <= n_bands - 1 (pigeonhole)")
     width = bits // n_bands
-    sig = simhash(docs, text_col, key_col, bits)
-    # one posexplode projection instead of an n_bands-way union: the
-    # union recomputed the signature aggregate once per band branch
     chunks = [
         F.shiftright(F.col("simhash"), b * width)
         .bitwiseAND(F.lit((1 << width) - 1))
         for b in range(n_bands)
     ]
-    bandr = sig.select(
-        "key", F.posexplode(F.array(*chunks)).alias("band", "chunk"),
-        "simhash")
-    if max_bucket_size is not None:
-        from phonlp_spark.ops.similarity import drop_hot_buckets
-        bandr = drop_hot_buckets(bandr, ["band", "chunk"], max_bucket_size)
-    cand = (
-        bandr.alias("l").join(bandr.alias("r"), ["band", "chunk"])
-        .filter(F.col("l.key") < F.col("r.key"))
-        .select(F.col("l.key").alias("a"), F.col("r.key").alias("b"),
-                F.col("l.simhash").alias("sa"), F.col("r.simhash").alias("sb"))
-        .distinct()
-    )
+    cand = _band_pairs(simhash(docs, text_col, key_col, bits), chunks,
+                       max_bucket_size, carry=("simhash",))
     return (
-        cand.withColumn("hamming", F.expr("bit_count(sa ^ sb)").cast("int"))
+        cand.withColumn("hamming",
+                        F.expr("bit_count(simhash_a ^ simhash_b)").cast("int"))
         .filter(F.col("hamming") <= max_hamming)
         .select("a", "b", "hamming")
     )

@@ -1,14 +1,35 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and near-dup detection over embedding columns
+(array<float>), on one candidate skeleton:
 
-- brute-force cosine top-k: JVM-side `zip_with`/`aggregate` dot product
-  over a broadcast query set — the exact baseline;
-- hyperplane-LSH bucketing: seeded random hyperplanes folded into the
-  plan as literal arrays, so the identical arithmetic runs in any ANSI
-  SQL engine (and buckets shrink the candidate space at scale: join on
-  bucket instead of full cross product).
+    assign -> guarded bucket join -> rerank (top-k) or verify (threshold)
+
+- Assigners are per-row projections (no shuffle) returning (vec_id,
+  group keys...): hyperplane LSH with n_tables (n_tables=1 is plain
+  LSH; multiprobe is its query-side Hamming-1 expansion), seeded IVF
+  and trained IVF with n_probe.  Hyperplanes and centroids are plan
+  literals, so any ANSI SQL engine runs the identical arithmetic.
+- Candidates come from a bucket join, never the cross product (the
+  100-TB shape): probe_pairs joins the corpus against the broadcast
+  query probes; bucket_pairs self-joins on the group keys with a < b
+  (also MinHash and SimHash banding in ops/dedup.py) after
+  drop_hot_buckets.  A pair can repeat only when a vector sits in
+  several groups (n_tables > 1, n_probe > 1 on both sides), so only
+  then do operators pay the distinct's extra shuffle.
+- rerank_topk keeps the k best exact cosines per query (ties by
+  neighbor id; candidates=None is the exhaustive cosine_topk);
+  verify_pairs keeps pairs with round(cos*1000) >= min_cos_x1000.
+  Both engines compute the identical IEEE double before the round, and
+  norms are projected once per vector — the same expressions, so the
+  cosine is bit-identical to the per-pair form.
+
+One table's recall is bounded by its single bucket (2-12% on the
+ann_recall gate); OR-amplified tables, multiprobe and trained cells are
+the ladder quality_recall measures.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -36,39 +57,6 @@ def norm(a: Column) -> Column:
         F.lit(0.0), lambda acc, v: acc + v))
 
 
-def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """(query_id, neighbor_id, rank): exact top-k cosine neighbors.
-
-    The query side is tiny by contract -> broadcast nested-loop join;
-    the corpus streams once, fanned out to cluster width (the scoring
-    work is |corpus| * |queries| dot products and must not sit inside
-    the scan stage's 1-2 tasks).  Norms are projected ONCE per vector
-    before the join instead of being recomputed per scored pair — the
-    identical double-precision expressions over the same values, so
-    cos is bit-identical.  Ties broken by neighbor id for determinism.
-    """
-    q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("_qn"))
-    c = fan_out(embeddings).select(F.col(id_col).alias("neighbor_id"),
-                                   F.col(vec_col).alias("cvec"),
-                                   norm(F.col(vec_col)).alias("_cn"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", dot(F.col("qvec"), F.col("cvec"))
-                    / (F.col("_qn") * F.col("_cn")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
 def seeded_hyperplanes(seed: int = 7, planes: int = LSH_PLANES,
                        dim: int = EMB_DIM) -> np.ndarray:
     return np.random.default_rng(seed).normal(size=(planes, dim))
@@ -78,12 +66,7 @@ def lsh_buckets(embeddings: DataFrame, seed: int = 7,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 planes: int = LSH_PLANES) -> DataFrame:
     """(vec_id, bucket): sign-bit bucket under seeded hyperplanes.
-
-    The hyperplanes are literal constants in the plan — reproducible on
-    any engine, and the bucket is a pure per-row expression (no
-    shuffle); ANN search then joins candidates within a bucket only.
-    `planes` scales the bucket count (2^planes) with corpus size.
-    """
+    `planes` scales the bucket count (2^planes) with corpus size."""
     hp = seeded_hyperplanes(seed, planes)
     bucket = F.lit(0)
     for p in range(hp.shape[0]):
@@ -96,203 +79,68 @@ def lsh_buckets(embeddings: DataFrame, seed: int = 7,
                                       bucket.cast("int").alias("bucket"))
 
 
-def ann_topk_lsh(embeddings: DataFrame, query_ids: list[int], k: int = 5,
-                 seed: int = 7, id_col: str = "vec_id",
-                 vec_col: str = "embedding",
-                 planes: int = LSH_PLANES) -> DataFrame:
-    """Approximate top-k: exact rescoring restricted to same-bucket
-    candidates (the scale path: bucket join replaces the cross join)."""
-    b = lsh_buckets(embeddings, seed, id_col, vec_col, planes) \
-        .withColumnRenamed("vec_id", "_bid")
-    e = embeddings.join(b, F.col(id_col) == F.col("_bid")).drop("_bid")
-    q = e.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        F.col("bucket"))
-    c = e.select(F.col(id_col).alias("neighbor_id"),
-                 F.col(vec_col).alias("cvec"), F.col("bucket"))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", dot(F.col("qvec"), F.col("cvec"))
-                    / (norm(F.col("qvec")) * norm(F.col("cvec"))))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
 def lsh_buckets_multi(embeddings: DataFrame, n_tables: int = 4,
                       planes: int = LSH_PLANES, seed: int = 7,
                       id_col: str = "vec_id",
                       vec_col: str = "embedding") -> DataFrame:
-    """(vec_id, table_id, bucket): L independent hash tables.
-
-    One table's recall is bounded by its single bucket (measurably bad:
-    the ann_recall gate shows 2-12% here); OR-amplification across L
-    tables is the standard fix — a neighbor is a candidate if it
-    collides in ANY table.  Table t uses hyperplanes seeded seed+t.
-    Still a pure per-row projection (union of L codegen exprs, no
-    shuffle); candidate generation joins on (table_id, bucket)."""
-    out = None
-    for t in range(n_tables):
-        b = lsh_buckets(embeddings, seed + t, id_col, vec_col, planes) \
-            .select("vec_id", F.lit(t).alias("table_id"), "bucket")
-        out = b if out is None else out.unionAll(b)
-    return out
+    """(vec_id, table_id, bucket): L independent hash tables; table t
+    uses hyperplanes seeded seed+t (so table 0 is lsh_buckets).  A
+    neighbor is a candidate if it collides in ANY table."""
+    return reduce(DataFrame.unionAll, [
+        lsh_buckets(embeddings, seed + t, id_col, vec_col, planes)
+        .select("vec_id", F.lit(t).alias("table_id"), "bucket")
+        for t in range(n_tables)])
 
 
-def ann_topk_lsh_multi(embeddings: DataFrame, query_ids: list[int],
-                       k: int = 5, n_tables: int = 4,
-                       planes: int = LSH_PLANES, seed: int = 7,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
-    """Approximate top-k over the union of L hash tables' candidates
-    (deduped before rescoring, so a pair colliding in several tables is
-    scored once)."""
+def lsh_buckets_multiprobe(embeddings: DataFrame, n_tables: int = 4,
+                           planes: int = LSH_PLANES, seed: int = 7,
+                           id_col: str = "vec_id",
+                           vec_col: str = "embedding") -> DataFrame:
+    """(vec_id, table_id, bucket): multi-table buckets EXPANDED to the
+    full Hamming-1 neighborhood — each row also probes every bucket
+    one sign-flip away (planes+1 rows per vector per table).
+
+    A hyperplane code's nearest misses are overwhelmingly single-bit
+    flips (the query sits close to one hyperplane), so probing the
+    flip set recovers most of the recall OR-amplification alone leaves
+    behind at (planes+1)x candidate cost on ONE side.  Callers expand
+    the QUERY side only, so the corpus assignment stays n_tables rows
+    per vector."""
     mb = lsh_buckets_multi(embeddings, n_tables, planes, seed,
                            id_col, vec_col)
-    qb = mb.filter(F.col("vec_id").isin(query_ids)) \
-        .select(F.col("vec_id").alias("query_id"), "table_id", "bucket")
-    cand = (mb.join(F.broadcast(qb), ["table_id", "bucket"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", F.col("vec_id").alias("neighbor_id"))
-            .distinct())
-    e_q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    e_n = embeddings.select(F.col(id_col).alias("neighbor_id"),
-                            F.col(vec_col).alias("cvec"))
-    scored = (cand.join(F.broadcast(e_q), "query_id")
-              .join(e_n, "neighbor_id")
-              .withColumn("cos", dot(F.col("qvec"), F.col("cvec"))
-                          / (norm(F.col("qvec")) * norm(F.col("cvec")))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
-
-
-def drop_hot_buckets(assign: DataFrame, keys: list[str],
-                     cap: int | None) -> DataFrame:
-    """Hot-bucket guard for pair-generating bucket self-joins: drop
-    bucket groups holding more than ``cap`` rows BEFORE the self-join.
-
-    A degenerate corpus (millions of near-identical vectors hashing to
-    one bucket) otherwise goes quadratic inside that bucket — the same
-    failure mode the stop-shingle guard (ops/dedup.py jaccard_pairs)
-    covers for text.  Dropped buckets trade recall for a hard bound of
-    cap^2/2 pairs per bucket; the recall gates measure the cost.  The
-    hot-bucket list is tiny by construction (at most |corpus|/cap
-    rows) -> broadcast anti-join, one extra count aggregate.
-    """
-    if cap is None:
-        return assign
-    hot = (assign.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
-           .filter(F.col("_n") > cap).select(*keys))
-    return assign.join(F.broadcast(hot), keys, "left_anti")
-
-
-def embedding_near_dups(embeddings: DataFrame, min_cos_x1000: int = 950,
-                        seed: int = 7, id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        planes: int = LSH_PLANES,
-                        max_bucket_size: int | None = 100_000) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: (a, b, cos_x1000).
-
-    Candidates come from the hyperplane-LSH bucket join (never the full
-    cross product — the 100-TB shape), then exact cosine filters at
-    min_cos_x1000/1000.  Output is integer-valued (round(cos*1000)) so
-    oracles hash identically; both engines compute the identical IEEE
-    double expression before the round.  Buckets holding more than
-    ``max_bucket_size`` vectors are dropped from pair generation (see
-    drop_hot_buckets); the oracle SQL mirrors the cap.
-    """
-    b = drop_hot_buckets(
-        lsh_buckets(embeddings, seed, id_col, vec_col, planes),
-        ["bucket"], max_bucket_size)
-    e = embeddings.join(b, embeddings[id_col] == b["vec_id"]).drop(b["vec_id"])
-    left = e.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"),
-                    F.col("bucket"))
-    right = e.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"),
-                     F.col("bucket"))
-    pairs = (
-        left.join(right, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("cos", dot(F.col("va"), F.col("vb"))
-                    / (norm(F.col("va")) * norm(F.col("vb"))))
-        .withColumn("cos_x1000", F.round(F.col("cos") * 1000).cast("int"))
-        .filter(F.col("cos_x1000") >= min_cos_x1000)
-    )
-    return pairs.select("a", "b", "cos_x1000")
-
-
-def embedding_near_dups_multi(embeddings: DataFrame,
-                              min_cos_x1000: int = 950,
-                              n_tables: int = 4, planes: int = 6,
-                              seed: int = 7, id_col: str = "vec_id",
-                              vec_col: str = "embedding",
-                              max_bucket_size: int | None = 100_000
-                              ) -> DataFrame:
-    """Near-dup pairs with OR-amplified candidates: the union of L hash
-    tables' bucket collisions, deduped, then exact-cosine thresholded.
-    Same output contract as embedding_near_dups; the recall gate
-    (dedup_embedding_recall) measures how much more of the true pair
-    set the amplification retrieves.  Per-(table, bucket) groups over
-    ``max_bucket_size`` are dropped before the self-join (hot-bucket
-    guard; a pair survives if ANY of its tables stays under the cap)."""
-    mb = drop_hot_buckets(
-        lsh_buckets_multi(embeddings, n_tables, planes, seed,
-                          id_col, vec_col),
-        ["table_id", "bucket"], max_bucket_size)
-    cand = (
-        mb.alias("l").join(mb.alias("r"), ["table_id", "bucket"])
-        .filter(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(F.col("l.vec_id").alias("a"), F.col("r.vec_id").alias("b"))
-        .distinct()
-    )
-    e_a = embeddings.select(F.col(id_col).alias("a"),
-                            F.col(vec_col).alias("va"))
-    e_b = embeddings.select(F.col(id_col).alias("b"),
-                            F.col(vec_col).alias("vb"))
-    return (
-        cand.join(e_a, "a").join(e_b, "b")
-        .withColumn("cos", dot(F.col("va"), F.col("vb"))
-                    / (norm(F.col("va")) * norm(F.col("vb"))))
-        .withColumn("cos_x1000", F.round(F.col("cos") * 1000).cast("int"))
-        .filter(F.col("cos_x1000") >= min_cos_x1000)
-        .select("a", "b", "cos_x1000")
-    )
+    masks = F.array(*[F.lit(m) for m in [0] + [1 << p for p in range(planes)]])
+    return (mb.select("vec_id", "table_id", "bucket",
+                      F.explode(masks).alias("_m"))
+            .select("vec_id", "table_id",
+                    F.col("bucket").bitwiseXOR(F.col("_m")).alias("bucket")))
 
 
 def seeded_centroids(seed: int = 11, n_cells: int = 8,
                      dim: int = EMB_DIM) -> np.ndarray:
-    """IVF cell centroids.  Seeded draws here (deterministic, engine-
-    independent literals in the plan); production swaps in k-means-
-    trained centroids from a sample — the assign/search dataflow below
-    is identical either way."""
+    """IVF cell centroids as seeded draws (deterministic plan literals);
+    trained_centroids_rows is the trained swap — same assign/search
+    dataflow either way."""
     return np.random.default_rng(seed).normal(size=(n_cells, dim))
+
+
+def _first_max(scores: Column) -> Column:
+    """Index of the FIRST maximum score — the first-match rule ANSI
+    engines implement for list_position, so oracles agree on ties."""
+    return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
 
 
 def ivf_cells(embeddings: DataFrame, seed: int = 11, n_cells: int = 8,
               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """(vec_id, cell): nearest-centroid assignment, pure per-row codegen.
-
-    argmin ||v-c||^2 == argmax (v.c - |c|^2/2); scores go into an array
-    and the cell is the FIRST index holding the max (array_position) —
-    the same first-match rule ANSI engines implement, so oracles agree.
-    """
+    """(vec_id, cell): nearest seeded centroid, pure per-row codegen
+    (argmin ||v-c||^2 == argmax v.c - |c|^2/2)."""
     cents = seeded_centroids(seed, n_cells)
     scores = F.array(*[
         dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in c]))
         - F.lit(float(np.dot(c, c) / 2.0))
         for c in cents
     ])
-    cell = (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-    return embeddings.select(F.col(id_col).alias("vec_id"), cell.alias("cell"))
+    return embeddings.select(F.col(id_col).alias("vec_id"),
+                             _first_max(scores).alias("cell"))
 
 
 def quantized_vecs(embeddings: DataFrame, id_col: str = "vec_id",
@@ -314,92 +162,11 @@ def quantized_vecs(embeddings: DataFrame, id_col: str = "vec_id",
                                       vq.alias("vq"))
 
 
-def _score_q(vq, cq) -> Column:
-    """2*v.c - |c|^2 on the integer grid (argmax == argmin ||v-c||^2).
-    Values stay well under 2^53, so the double the oracle computes is
-    the same exact integer as this long."""
-    dot2 = F.aggregate(F.zip_with(vq, cq, lambda x, y: x * y),
-                       F.lit(0).cast("long"), lambda a, v: a + v)
-    nrm = F.aggregate(F.transform(cq, lambda x: x * x),
-                      F.lit(0).cast("long"), lambda a, v: a + v)
-    return F.lit(2).cast("long") * dot2 - nrm
-
-
-def assign_cells_q(vq_df: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, vq, cell): nearest-centroid assignment of quantized
-    vectors against a (cell, cq) centroid table.  Centroids are tiny by
-    construction (n_cells rows) -> broadcast nested-loop; ties go to
-    the smallest cell id, the same first-min rule as the literal-expr
-    seeded variant."""
-    scored = vq_df.crossJoin(F.broadcast(cents)) \
-        .withColumn("_score", _score_q(F.col("vq"), F.col("cq")))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("_score").desc(), F.col("cell").asc())
-    return (scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("vec_id", "vq", "cell"))
-
-
-def kmeans_centroids_q(embeddings: DataFrame, n_cells: int = 8,
-                       iters: int = 3, sample_mod: int = 2, seed: int = 11,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
-    """(cell, cq): Lloyd's k-means on the x1000 integer grid, fully
-    in-engine and deterministic.
-
-    - sample = rows with vec_id % sample_mod == 0 (a fixed fraction; at
-      100 TB the fit never touches the full corpus);
-    - init = the seeded centroids quantized to the same grid (plan
-      literals, engine-independent);
-    - each of the `iters` unrolled rounds: broadcast-join assignment
-      (argmin on exact integers), then per-dimension integer sums with
-      floor(sum/count) means — floor() is the one division both Spark
-      and ANSI engines round identically;
-    - cells that lose all members keep their previous centroid, so the
-      output always has exactly n_cells rows.
-
-    Scale shape: the sample shuffles once per round on (cell, dim) —
-    n_cells*dim tiny groups; centroids stay broadcast-sized throughout.
-    Production tunes sample_mod so the sample fits one stage.
-    """
-    spark = embeddings.sparkSession
-    samp = quantized_vecs(embeddings, id_col, vec_col) \
-        .filter(F.col("vec_id") % sample_mod == 0)
-    dim = EMB_DIM
-    init = [(c, [int(round(x * 1000)) for x in cent])
-            for c, cent in enumerate(seeded_centroids(seed, n_cells, dim))]
-    cents = spark.createDataFrame(init, "cell int, cq array<bigint>")
-    for _ in range(iters):
-        assigned = assign_cells_q(samp, cents)
-        upd = (assigned
-               .select("cell", F.posexplode("vq").alias("i", "v"))
-               .groupBy("cell", "i")
-               .agg(F.floor(F.sum("v").cast("double") / F.count("*"))
-                    .cast("long").alias("cv")))
-        newc = (upd.groupBy("cell")
-                .agg(F.transform(F.array_sort(F.collect_list(F.struct("i", "cv"))),
-                                 lambda s: s.cv).alias("cq_new")))
-        cents = (cents.join(newc, "cell", "left")
-                 .select("cell", F.coalesce("cq_new", "cq").alias("cq")))
-    return cents
-
-
-def trained_centroids_rows(embeddings: DataFrame, n_cells: int = 8,
-                           iters: int = 3, sample_mod: int = 2,
-                           seed: int = 11, id_col: str = "vec_id",
-                           vec_col: str = "embedding") -> list[tuple[int, list[int]]]:
-    """Materialize the k-means fit as [(cell, cq)] driver-side, ordered
-    by cell.  Bounded (n_cells rows) by construction; the fit itself
-    stays distributed — only its tiny result crosses to the driver so
-    downstream assignment can be a shuffle-free literal expression."""
-    cents = kmeans_centroids_q(embeddings, n_cells, iters, sample_mod,
-                               seed, id_col, vec_col)
-    return sorted((r["cell"], list(r["cq"])) for r in cents.collect())
-
-
-def _scores_arr_q(cents_rows, vq) -> Column:
-    """array of 2*v.c - |c|^2 integer scores against literal centroids
-    (index == cell): pure per-row codegen, no join, no shuffle."""
+def _scores_q(cents_rows, vq: Column) -> Column:
+    """Array of 2*v.c - |c|^2 integer scores of ``vq`` against literal
+    centroids [(cell, cq)] in cell order (index == cell; argmax ==
+    argmin ||v-c||^2).  Values stay well under 2^53, so the double the
+    oracle computes is the same exact integer as this long."""
     terms = []
     for _cell, cq in cents_rows:
         lit_c = F.array(*[F.lit(int(x)).cast("long") for x in cq])
@@ -410,29 +177,73 @@ def _scores_arr_q(cents_rows, vq) -> Column:
     return F.array(*terms)
 
 
+def trained_centroids_rows(embeddings: DataFrame, n_cells: int = 8,
+                           iters: int = 3, sample_mod: int = 2,
+                           seed: int = 11, id_col: str = "vec_id",
+                           vec_col: str = "embedding") -> list[tuple[int, list[int]]]:
+    """[(cell, cq)] in cell order: Lloyd's k-means on the x1000 integer
+    grid, in-engine and deterministic.
+
+    - sample = rows with vec_id % sample_mod == 0 (a fixed fraction; at
+      100 TB the fit never touches the full corpus);
+    - init = the seeded centroids quantized to the same grid;
+    - each of the `iters` rounds assigns the sample with the literal
+      score array the trained assigners serve with (argmax on exact
+      integers, smallest cell on ties), then takes per-dimension
+      integer sums with floor(sum/count) means — floor() is the one
+      division both Spark and ANSI engines round identically; the
+      n_cells x dim means are collected as the next round's literals;
+    - cells that lose all members keep their previous centroid, so the
+      output always has exactly n_cells rows.
+
+    Scale shape: the sample shuffles once per round on (cell, dim) —
+    n_cells*dim tiny groups.  Production tunes sample_mod so the sample
+    fits one stage.
+    """
+    samp = quantized_vecs(embeddings, id_col, vec_col) \
+        .filter(F.col("vec_id") % sample_mod == 0)
+    rows = [(c, [int(round(x * 1000)) for x in cent])
+            for c, cent in enumerate(seeded_centroids(seed, n_cells))]
+    for _ in range(iters):
+        upd = (samp.select(_first_max(_scores_q(rows, F.col("vq"))).alias("cell"),
+                           F.posexplode("vq").alias("i", "v"))
+               .groupBy("cell", "i")
+               .agg(F.floor(F.sum("v").cast("double") / F.count("*"))
+                    .cast("long").alias("cv")))
+        new = dict(upd.groupBy("cell").agg(F.transform(
+            F.array_sort(F.collect_list(F.struct("i", "cv"))),
+            lambda s: s.cv)).collect())
+        rows = [(c, list(new.get(c, cq))) for c, cq in rows]
+    return rows
+
+
+def _trained_scores(embeddings: DataFrame, cents_rows, n_cells: int,
+                    iters: int, sample_mod: int, seed: int, id_col: str,
+                    vec_col: str) -> tuple[DataFrame, Column]:
+    """The trained-IVF prelude: (vq frame, _scores_q array).  Pure
+    per-row codegen, no join, no shuffle over the corpus.
+    ``cents_rows`` is a precomputed trained_centroids_rows(...) result;
+    callers composing several trained-IVF operators over one corpus
+    pass it to fit k-means ONCE instead of once per operator."""
+    rows = cents_rows if cents_rows is not None else trained_centroids_rows(
+        embeddings, n_cells, iters, sample_mod, seed, id_col, vec_col)
+    vq = quantized_vecs(embeddings, id_col, vec_col)
+    return vq, _scores_q(rows, F.col("vq"))
+
+
 def ivf_cells_trained(embeddings: DataFrame, n_cells: int = 8,
                       iters: int = 3, sample_mod: int = 2, seed: int = 11,
                       id_col: str = "vec_id",
                       vec_col: str = "embedding",
                       cents_rows: list[tuple[int, list[int]]] | None = None
                       ) -> DataFrame:
-    """(vec_id, cell) under k-means-trained centroids (the production
-    swap COVERAGE.md promises for the seeded ivf_cells).
-
-    Corpus assignment is a PER-ROW literal-expression argmax — exactly
-    the seeded ivf_cells plan shape, zero shuffle over the corpus; only
-    the sample-sized fit shuffles.  First-max tie rule == smallest
-    cell, matching the fit's ORDER BY score DESC, cell.
-
-    ``cents_rows``: precomputed trained_centroids_rows(...) output.
-    Callers composing several trained-IVF operators over the same
-    corpus pass it to fit k-means ONCE instead of once per operator."""
-    rows = cents_rows if cents_rows is not None else trained_centroids_rows(
-        embeddings, n_cells, iters, sample_mod, seed, id_col, vec_col)
-    vq = quantized_vecs(embeddings, id_col, vec_col)
-    scores = _scores_arr_q(rows, F.col("vq"))
-    cell = (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-    return vq.select("vec_id", cell.alias("cell"))
+    """(vec_id, cell) under k-means-trained centroids: the seeded
+    ivf_cells plan shape, zero shuffle over the corpus (only the
+    sample-sized fit shuffles).  First-max tie rule == smallest cell,
+    matching the fit's ORDER BY score DESC, cell."""
+    vq, scores = _trained_scores(embeddings, cents_rows, n_cells, iters,
+                                 sample_mod, seed, id_col, vec_col)
+    return vq.select("vec_id", _first_max(scores).alias("cell"))
 
 
 def ivf_probed_cells_trained(embeddings: DataFrame, n_probe: int = 2,
@@ -443,18 +254,12 @@ def ivf_probed_cells_trained(embeddings: DataFrame, n_probe: int = 2,
                              cents_rows: list[tuple[int, list[int]]] | None = None
                              ) -> DataFrame:
     """(vec_id, cell): each vector assigned to its ``n_probe`` nearest
-    trained cells (first row per vector == ivf_cells_trained's home
-    cell; n_probe=1 degenerates to it exactly).
-
-    Still a pure per-row projection — the cell ranking is an in-row
-    array sort over n_cells integer scores (negated so ascending
-    array_sort realizes score-desc with smallest-cell tie rule), so
-    the corpus never shuffles for assignment; output is n_probe rows
-    per vector."""
-    rows = cents_rows if cents_rows is not None else trained_centroids_rows(
-        embeddings, n_cells, iters, sample_mod, seed, id_col, vec_col)
-    vq = quantized_vecs(embeddings, id_col, vec_col)
-    scores = _scores_arr_q(rows, F.col("vq"))
+    trained cells (n_probe=1 is ivf_cells_trained exactly).  Still a
+    per-row projection: an in-row array sort over n_cells integer
+    scores (negated so ascending array_sort realizes score-desc with
+    the smallest-cell tie rule); n_probe rows per vector."""
+    vq, scores = _trained_scores(embeddings, cents_rows, n_cells, iters,
+                                 sample_mod, seed, id_col, vec_col)
     ranked = F.array_sort(F.transform(
         scores, lambda sc, i: F.struct((-sc).alias("ns"),
                                        i.alias("cell"))))
@@ -463,28 +268,128 @@ def ivf_probed_cells_trained(embeddings: DataFrame, n_probe: int = 2,
             .select("vec_id", F.col("p.cell").cast("int").alias("cell")))
 
 
-def lsh_buckets_multiprobe(embeddings: DataFrame, n_tables: int = 4,
-                           planes: int = LSH_PLANES, seed: int = 7,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding") -> DataFrame:
-    """(vec_id, table_id, bucket): multi-table buckets EXPANDED to the
-    full Hamming-1 neighborhood — each row also probes every bucket
-    one sign-flip away (planes+1 rows per vector per table).
+def drop_hot_buckets(assign: DataFrame, keys: list[str],
+                     cap: int | None) -> DataFrame:
+    """Hot-bucket guard for pair-generating bucket self-joins: drop
+    bucket groups holding more than ``cap`` rows BEFORE the self-join.
 
-    A hyperplane code's nearest misses are overwhelmingly single-bit
-    flips (the query sits close to one hyperplane), so probing the
-    flip set recovers most of the recall OR-amplification alone leaves
-    behind (measured in the quality_recall gate) at (planes+1)x
-    candidate cost on ONE side.  Callers expand the QUERY side only —
-    the corpus side keeps its exact buckets — so the corpus assignment
-    stays a per-row projection of n_tables rows."""
+    Dropped buckets trade recall for a hard bound of cap^2/2 pairs per
+    bucket (the same failure mode the stop-shingle guard in
+    ops/dedup.py jaccard_pairs covers for text); the recall gates
+    measure the cost and the oracle SQL mirrors the cap.  The hot list
+    is tiny by construction (at most |corpus|/cap rows) -> broadcast
+    anti-join, one extra count aggregate.  ``cap=None`` disables it.
+    """
+    if cap is None:
+        return assign
+    # df: rows per group (document frequency when the groups are shingles)
+    hot = (assign.groupBy(*keys).agg(F.count(F.lit(1)).alias("df"))
+           .filter(F.col("df") > cap).select(*keys))
+    return assign.join(F.broadcast(hot), keys, "left_anti")
+
+
+def bucket_pairs(assign: DataFrame, keys: list[str],
+                 max_bucket_size: int | None = None, dedupe: bool = True,
+                 id_col: str = "vec_id", carry: tuple[str, ...] = ()
+                 ) -> DataFrame:
+    """(a, b, {c}_a, {c}_b for c in carry): every pair sharing a group
+    of ``assign`` on ``keys``, a < b, after the hot-bucket guard.
+    ``dedupe`` must be set when a row can sit in several groups."""
+    g = drop_hot_buckets(assign, keys, max_bucket_size)
+    left, right = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
+    pairs = (g.alias("l").join(g.alias("r"), keys)
+             .filter(left < right)
+             .select(left.alias("a"), right.alias("b"),
+                     *[F.col(f"{s}.{c}").alias(f"{c}_{t}")
+                       for c in carry for s, t in (("l", "a"), ("r", "b"))]))
+    return pairs.distinct() if dedupe else pairs
+
+
+def probe_pairs(corpus: DataFrame, probes: DataFrame, keys: list[str],
+                dedupe: bool) -> DataFrame:
+    """(query_id, neighbor_id): corpus assignments (vec_id, keys...)
+    colliding with a query's probe groups (vec_id, keys...).  The query
+    side is tiny by contract -> broadcast."""
+    q = probes.select(F.col("vec_id").alias("query_id"), *keys)
+    pairs = (corpus.join(F.broadcast(q), keys)
+             .filter(F.col("vec_id") != F.col("query_id"))
+             .select("query_id", F.col("vec_id").alias("neighbor_id")))
+    return pairs.distinct() if dedupe else pairs
+
+
+def _side(df: DataFrame, key: str, p: str, id_col: str,
+          vec_col: str) -> DataFrame:
+    """(key, {p}vec, _{p}n): one side of a scored pair, norm once."""
+    return df.select(F.col(id_col).alias(key), F.col(vec_col).alias(f"{p}vec"),
+                     norm(F.col(vec_col)).alias(f"_{p}n"))
+
+
+def _cos(a: str, b: str) -> Column:
+    return (dot(F.col(f"{a}vec"), F.col(f"{b}vec"))
+            / (F.col(f"_{a}n") * F.col(f"_{b}n")))
+
+
+def rerank_topk(candidates: DataFrame | None, embeddings: DataFrame,
+                query_ids: list[int], k: int = 5, id_col: str = "vec_id",
+                vec_col: str = "embedding") -> DataFrame:
+    """(query_id, neighbor_id, rank): exact-cosine top-k over
+    (query_id, neighbor_id) candidates, ties broken by neighbor id.
+
+    ``candidates=None`` scores every corpus vector: the corpus streams
+    once, fanned out to cluster width (|corpus| * |queries| dot
+    products must not sit inside the scan stage's 1-2 tasks), against
+    the broadcast query set."""
+    q = _side(embeddings.filter(F.col(id_col).isin(query_ids)),
+              "query_id", "q", id_col, vec_col)
+    if candidates is None:
+        scored = (_side(fan_out(embeddings), "neighbor_id", "c", id_col, vec_col)
+                  .crossJoin(F.broadcast(q))
+                  .filter(F.col("neighbor_id") != F.col("query_id")))
+    else:
+        scored = (candidates.join(F.broadcast(q), "query_id")
+                  .join(_side(embeddings, "neighbor_id", "c", id_col, vec_col),
+                        "neighbor_id"))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id").asc())
+    return (scored.withColumn("cos", _cos("q", "c"))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank"))
+
+
+def verify_pairs(candidates: DataFrame, embeddings: DataFrame,
+                 min_cos_x1000: int, id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
+    """(a, b, cos_x1000): the (a, b) candidates whose exact cosine
+    rounds to at least min_cos_x1000/1000."""
+    return (
+        candidates.join(_side(embeddings, "a", "a", id_col, vec_col), "a")
+        .join(_side(embeddings, "b", "b", id_col, vec_col), "b")
+        .withColumn("cos_x1000", F.round(_cos("a", "b") * 1000).cast("int"))
+        .filter(F.col("cos_x1000") >= min_cos_x1000)
+        .select("a", "b", "cos_x1000")
+    )
+
+
+def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5,
+                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """Exact top-k cosine neighbors: the baseline every ANN variant's
+    recall is measured against."""
+    return rerank_topk(None, embeddings, query_ids, k, id_col, vec_col)
+
+
+def ann_topk_lsh_multi(embeddings: DataFrame, query_ids: list[int],
+                       k: int = 5, n_tables: int = 4,
+                       planes: int = LSH_PLANES, seed: int = 7,
+                       id_col: str = "vec_id",
+                       vec_col: str = "embedding") -> DataFrame:
+    """Approximate top-k over the union of L hash tables' same-bucket
+    candidates; n_tables=1 is single-table LSH."""
     mb = lsh_buckets_multi(embeddings, n_tables, planes, seed,
                            id_col, vec_col)
-    masks = F.array(*[F.lit(m) for m in [0] + [1 << p for p in range(planes)]])
-    return (mb.select("vec_id", "table_id", "bucket",
-                      F.explode(masks).alias("_m"))
-            .select("vec_id", "table_id",
-                    F.col("bucket").bitwiseXOR(F.col("_m")).alias("bucket")))
+    cand = probe_pairs(mb, mb.filter(F.col("vec_id").isin(query_ids)),
+                       ["table_id", "bucket"], dedupe=n_tables > 1)
+    return rerank_topk(cand, embeddings, query_ids, k, id_col, vec_col)
 
 
 def ann_topk_lsh_multiprobe(embeddings: DataFrame, query_ids: list[int],
@@ -493,33 +398,28 @@ def ann_topk_lsh_multiprobe(embeddings: DataFrame, query_ids: list[int],
                             id_col: str = "vec_id",
                             vec_col: str = "embedding") -> DataFrame:
     """Multiprobe multi-table LSH top-k: candidates collide with the
-    query's own bucket OR any Hamming-1 perturbation of it, per table;
-    union deduped, then exact cosine rescoring.  Query-side-only
-    expansion: |queries| * n_tables * (planes+1) probe rows against
-    the unexpanded corpus assignment."""
+    query's own bucket OR any Hamming-1 perturbation of it, per table.
+    |queries| * n_tables * (planes+1) probe rows against the
+    unexpanded corpus assignment."""
     mb = lsh_buckets_multi(embeddings, n_tables, planes, seed,
                            id_col, vec_col)
-    qb = (lsh_buckets_multiprobe(
+    qb = lsh_buckets_multiprobe(
         embeddings.filter(F.col(id_col).isin(query_ids)),
         n_tables, planes, seed, id_col, vec_col)
-        .select(F.col("vec_id").alias("query_id"), "table_id", "bucket"))
-    cand = (mb.join(F.broadcast(qb), ["table_id", "bucket"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", F.col("vec_id").alias("neighbor_id"))
-            .distinct())
-    e_q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    e_n = embeddings.select(F.col(id_col).alias("neighbor_id"),
-                            F.col(vec_col).alias("cvec"))
-    scored = (cand.join(F.broadcast(e_q), "query_id")
-              .join(e_n, "neighbor_id")
-              .withColumn("cos", dot(F.col("qvec"), F.col("cvec"))
-                          / (norm(F.col("qvec")) * norm(F.col("cvec")))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+    cand = probe_pairs(mb, qb, ["table_id", "bucket"], dedupe=n_tables > 1)
+    return rerank_topk(cand, embeddings, query_ids, k, id_col, vec_col)
+
+
+def ann_topk_ivf(embeddings: DataFrame, query_ids: list[int], k: int = 5,
+                 seed: int = 11, n_cells: int = 8, id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
+    """Seeded-IVF top-k over the query's own cell (n_probe=1): a query
+    touches |corpus|/n_cells candidates, and n_cells grows with the
+    corpus."""
+    cells = ivf_cells(embeddings, seed, n_cells, id_col, vec_col)
+    cand = probe_pairs(cells, cells.filter(F.col("vec_id").isin(query_ids)),
+                       ["cell"], dedupe=False)
+    return rerank_topk(cand, embeddings, query_ids, k, id_col, vec_col)
 
 
 def ann_topk_ivf_trained(embeddings: DataFrame, query_ids: list[int],
@@ -529,52 +429,40 @@ def ann_topk_ivf_trained(embeddings: DataFrame, query_ids: list[int],
                          vec_col: str = "embedding",
                          cents_rows: list[tuple[int, list[int]]] | None = None
                          ) -> DataFrame:
-    """IVF top-k with trained centroids and multi-cell probing.
-
-    Each query probes its n_probe nearest cells (by the same integer
-    score), then exact cosine rescoring runs only over those inverted
-    lists — |corpus| * n_probe / n_cells candidates instead of the
-    cross product.  A corpus vector lives in exactly one cell, so
-    probing never duplicates candidates.  Corpus-side cell assignment
-    is the shuffle-free literal projection (ivf_cells_trained); only
-    the |queries| * n_cells probe ranking touches a window.
-    ``cents_rows`` skips the fit when precomputed (see
-    ivf_cells_trained).
-    """
-    rows = cents_rows if cents_rows is not None else trained_centroids_rows(
-        embeddings, n_cells, iters, sample_mod, seed, id_col, vec_col)
-    vq = quantized_vecs(embeddings, id_col, vec_col)
-    scores = _scores_arr_q(rows, F.col("vq"))
-    cell = (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-    cells = vq.select("vec_id", cell.alias("cell"))
-
-    probes_scored = (vq.filter(F.col("vec_id").isin(query_ids))
-                     .select("vec_id", F.posexplode(scores)
-                             .alias("cell", "_score")))
+    """Trained-IVF top-k: each query probes its n_probe nearest cells
+    (by the same integer score); the corpus sits in exactly its home
+    cell, so probing never duplicates candidates.  Only the
+    |queries| * n_cells probe ranking touches a window."""
+    vq, scores = _trained_scores(embeddings, cents_rows, n_cells, iters,
+                                 sample_mod, seed, id_col, vec_col)
     wq = Window.partitionBy("vec_id").orderBy(
         F.col("_score").desc(), F.col("cell").asc())
-    probes = (probes_scored.withColumn("_rn", F.row_number().over(wq))
+    probes = (vq.filter(F.col("vec_id").isin(query_ids))
+              .select("vec_id", F.posexplode(scores).alias("cell", "_score"))
+              .withColumn("_rn", F.row_number().over(wq))
               .filter(F.col("_rn") <= n_probe)
-              .select(F.col("vec_id").alias("query_id"),
-                      F.col("cell").cast("int").alias("cell")))
+              .select("vec_id", F.col("cell").cast("int").alias("cell")))
+    cand = probe_pairs(vq.select("vec_id", _first_max(scores).alias("cell")),
+                       probes, ["cell"], dedupe=False)
+    return rerank_topk(cand, embeddings, query_ids, k, id_col, vec_col)
 
-    cand = (cells.join(F.broadcast(probes), "cell")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", F.col("vec_id").alias("neighbor_id")))
-    e_q = embeddings.select(F.col(id_col).alias("query_id"),
-                            F.col(vec_col).alias("qvec"))
-    e_n = embeddings.select(F.col(id_col).alias("neighbor_id"),
-                            F.col(vec_col).alias("cvec"))
-    scored = (cand.join(F.broadcast(e_q.filter(F.col("query_id").isin(query_ids))),
-                        "query_id")
-              .join(e_n, "neighbor_id")
-              .withColumn("cos", dot(F.col("qvec"), F.col("cvec"))
-                          / (norm(F.col("qvec")) * norm(F.col("cvec")))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+
+def embedding_near_dups_multi(embeddings: DataFrame,
+                              min_cos_x1000: int = 950,
+                              n_tables: int = 4, planes: int = 6,
+                              seed: int = 7, id_col: str = "vec_id",
+                              vec_col: str = "embedding",
+                              max_bucket_size: int | None = 100_000
+                              ) -> DataFrame:
+    """Embedding-cosine near-dup pairs (a, b, cos_x1000) from the union
+    of L hash tables' bucket collisions; n_tables=1 is single-table
+    LSH.  Per-(table, bucket) groups over ``max_bucket_size`` are
+    dropped, so a pair survives if ANY of its tables stays under the
+    cap."""
+    cand = bucket_pairs(
+        lsh_buckets_multi(embeddings, n_tables, planes, seed, id_col, vec_col),
+        ["table_id", "bucket"], max_bucket_size, dedupe=n_tables > 1)
+    return verify_pairs(cand, embeddings, min_cos_x1000, id_col, vec_col)
 
 
 def embedding_near_dups_ivf(embeddings: DataFrame,
@@ -587,89 +475,42 @@ def embedding_near_dups_ivf(embeddings: DataFrame,
                             max_bucket_size: int | None = 100_000,
                             n_probe: int = 2) -> DataFrame:
     """Near-dup pairs with trained-IVF candidates: pairs sharing ANY of
-    each vector's ``n_probe`` nearest k-means cells (shuffle-free
-    per-row assignment), deduped, exact-cosine thresholded.
+    each vector's ``n_probe`` nearest k-means cells.
 
     n_probe=1 is the classic same-cell generator; its measured miss
-    mode (VERDICT r4 next-round #4) is true pairs STRADDLING a cell
-    boundary — both members near the edge of adjacent cells.  Probing
-    each vector's second-nearest cell makes such a pair collide in one
-    of the probed cells at n_probe x candidate cost, the same
-    neighbor-cell expansion ann_topk_ivf_trained applies on the query
-    side.  On clustered embeddings the cells track the actual
-    neighborhoods, so candidate recall beats hyperplane bucketing —
-    measured by the quality_recall gate.  ``cents_rows`` skips the fit
-    when precomputed; probed cell groups over ``max_bucket_size`` rows
-    are dropped from pair generation (hot-bucket guard, see
-    embedding_near_dups)."""
-    cells = drop_hot_buckets(
+    mode is true pairs STRADDLING a cell boundary — both members near
+    the edge of adjacent cells.  Probing each vector's second-nearest
+    cell makes such a pair collide in one of the probed cells at
+    n_probe x candidate cost.  On clustered embeddings the cells track
+    the actual neighborhoods, so candidate recall beats hyperplane
+    bucketing (the quality_recall gate)."""
+    cand = bucket_pairs(
         ivf_probed_cells_trained(embeddings, n_probe, n_cells, iters,
                                  sample_mod, seed, id_col, vec_col,
                                  cents_rows=cents_rows),
-        ["cell"], max_bucket_size)
-    cand = (
-        cells.alias("l").join(cells.alias("r"), "cell")
-        .filter(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(F.col("l.vec_id").alias("a"), F.col("r.vec_id").alias("b"))
-        .distinct()
-    )
-    e_a = embeddings.select(F.col(id_col).alias("a"),
-                            F.col(vec_col).alias("va"))
-    e_b = embeddings.select(F.col(id_col).alias("b"),
-                            F.col(vec_col).alias("vb"))
-    return (
-        cand.join(e_a, "a").join(e_b, "b")
-        .withColumn("cos", dot(F.col("va"), F.col("vb"))
-                    / (norm(F.col("va")) * norm(F.col("vb"))))
-        .withColumn("cos_x1000", F.round(F.col("cos") * 1000).cast("int"))
-        .filter(F.col("cos_x1000") >= min_cos_x1000)
-        .select("a", "b", "cos_x1000")
-    )
+        ["cell"], max_bucket_size, dedupe=n_probe > 1)
+    return verify_pairs(cand, embeddings, min_cos_x1000, id_col, vec_col)
+
+
+def recall_row(hit_rows: DataFrame, total_rows: DataFrame,
+               method: str) -> DataFrame:
+    """One summary row (method, hits, total, recall_permille) counting
+    ``hit_rows`` against ``total_rows`` — integer permille so the row
+    hashes identically across engines (0 when total is 0)."""
+    return (hit_rows.agg(F.count(F.lit(1)).alias("hits"))
+            .crossJoin(total_rows.agg(F.count(F.lit(1)).alias("total")))
+            .select(F.lit(method).alias("method"),
+                    F.col("hits").cast("bigint").alias("hits"),
+                    F.col("total").cast("bigint").alias("total"),
+                    F.expr("CAST(hits * 1000 DIV greatest(total, 1) AS INT)")
+                    .alias("recall_permille")))
 
 
 def recall_vs_exact(exact: DataFrame, approx: DataFrame,
                     method: str) -> DataFrame:
-    """One summary row: how much of the exact top-k the approximate
-    method retrieved.  (method, hits, total, recall_permille) — integer
-    permille so the row hashes identically across engines."""
+    """recall_row of how much of the exact top-k the approximate
+    method retrieved."""
     pairs = exact.select("query_id", "neighbor_id")
     hits = pairs.join(approx.select("query_id", "neighbor_id"),
-                      ["query_id", "neighbor_id"], "left_semi") \
-        .agg(F.count(F.lit(1)).alias("hits"))
-    total = pairs.agg(F.count(F.lit(1)).alias("total"))
-    return (hits.crossJoin(total)
-            .select(F.lit(method).alias("method"),
-                    F.col("hits").cast("bigint").alias("hits"),
-                    F.col("total").cast("bigint").alias("total"),
-                    F.expr("CAST(hits * 1000 DIV total AS INT)")
-                    .alias("recall_permille")))
-
-
-def ann_topk_ivf(embeddings: DataFrame, query_ids: list[int], k: int = 5,
-                 seed: int = 11, n_cells: int = 8, id_col: str = "vec_id",
-                 vec_col: str = "embedding") -> DataFrame:
-    """IVF approximate top-k: exact cosine rescoring restricted to the
-    query's own cell (n_probe=1).  Scale shape: the corpus partitions
-    into n_cells inverted lists; a query touches |corpus|/n_cells
-    candidates instead of everything, and n_cells grows with corpus."""
-    c_assign = ivf_cells(embeddings, seed, n_cells, id_col, vec_col) \
-        .withColumnRenamed("vec_id", "_cid")
-    e = embeddings.join(c_assign, F.col(id_col) == F.col("_cid")).drop("_cid")
-    q = e.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        F.col("cell"))
-    cand = e.select(F.col(id_col).alias("neighbor_id"),
-                    F.col(vec_col).alias("cvec"), F.col("cell"))
-    scored = (
-        cand.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", dot(F.col("qvec"), F.col("cvec"))
-                    / (norm(F.col("qvec")) * norm(F.col("cvec"))))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+                      ["query_id", "neighbor_id"], "left_semi")
+    return recall_row(hits, pairs, method)

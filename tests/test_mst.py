@@ -117,4 +117,39 @@ def test_native_solver_bit_identical_to_numpy():
             s = rng.normal(size=(n, n))
         else:
             s = np.round(rng.normal(size=(n, n)) * 2) / 2
+        if trial % 7 == 0:
+            # NaN scores (a checkpoint whose logits hit inf - inf):
+            # np.argmax picks the first NaN, so these must take the
+            # numpy path
+            s[rng.random(size=(n, n)) < 0.2] = np.nan
         assert np.array_equal(mst_single_root(s), _mst_single_root_py(s))
+
+
+def test_native_loader_rejects_untrusted_library(tmp_path, monkeypatch):
+    """A cached solver library that group/other can write, or that
+    another uid owns, must never reach ctypes.CDLL; a private one does."""
+    import ctypes
+    import tempfile
+    from phonlp_spark.kernel import mst
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    loaded = []
+    monkeypatch.setattr(ctypes, "CDLL", lambda path, *a, **k: loaded.append(path))
+
+    def plant(mode):
+        so = mst._so_path()
+        with open(so, "wb") as f:
+            f.write(b"not a library")
+        os.chmod(so, mode)
+        return so
+
+    plant(0o666)  # group/other writable
+    assert mst._load_native() is None
+    real_uid = os.getuid()
+    with monkeypatch.context() as m:
+        m.setattr(os, "getuid", lambda: real_uid + 1)  # owned by another uid
+        plant(0o600)
+        assert mst._load_native() is None
+    assert loaded == []
+    so = plant(0o600)
+    mst._load_native()
+    assert loaded == [so]

@@ -223,10 +223,8 @@ def test_kmeans_centroids_deterministic_across_partitioning(spark):  # noqa: F81
     """The integer-grid fit is partitioning-invariant: exact integer
     sums and floor-division means leave no float-order freedom."""
     emb = _clustered_emb(spark)
-    a = {r["cell"]: r["cq"] for r in
-         similarity.kmeans_centroids_q(emb, n_cells=4).collect()}
-    b = {r["cell"]: r["cq"] for r in
-         similarity.kmeans_centroids_q(emb.repartition(13), n_cells=4).collect()}
+    a = dict(similarity.trained_centroids_rows(emb, n_cells=4))
+    b = dict(similarity.trained_centroids_rows(emb.repartition(13), n_cells=4))
     assert a == b
     assert len(a) == 4  # empty cells keep their previous centroid
 
@@ -254,7 +252,8 @@ def test_lsh_multi_table_amplifies_recall(spark):  # noqa: F811
     qids = list(range(8))
     exact = similarity.cosine_topk(emb, qids, k=5)
     single = similarity.recall_vs_exact(
-        exact, similarity.ann_topk_lsh(emb, qids, k=5, planes=6), "1").collect()[0]
+        exact, similarity.ann_topk_lsh_multi(
+            emb, qids, k=5, n_tables=1, planes=6), "1").collect()[0]
     multi = similarity.recall_vs_exact(
         exact, similarity.ann_topk_lsh_multi(
             emb, qids, k=5, n_tables=4, planes=6), "m").collect()[0]
@@ -338,8 +337,8 @@ def test_embedding_near_dup_candidates_improve(spark):  # noqa: F811
     exact = {(r["a"], r["b"]) for r in
              left.join(right, F.col("a") < F.col("b"))
              .filter(F.round(cos * 1000) >= thr).collect()}
-    single = {(r["a"], r["b"]) for r in similarity.embedding_near_dups(
-        emb, min_cos_x1000=thr, planes=6).collect()}
+    single = {(r["a"], r["b"]) for r in similarity.embedding_near_dups_multi(
+        emb, min_cos_x1000=thr, n_tables=1, planes=6).collect()}
     multi = {(r["a"], r["b"]) for r in similarity.embedding_near_dups_multi(
         emb, min_cos_x1000=thr, n_tables=4, planes=6).collect()}
     ivf = {(r["a"], r["b"]) for r in similarity.embedding_near_dups_ivf(
@@ -385,11 +384,11 @@ def test_hot_bucket_guard_bounds_pair_explosion(spark):  # noqa: F811
     vec = [float((i % 7) - 3) / 3.0 for i in range(similarity.EMB_DIM)]
     emb = spark.createDataFrame([(i, vec) for i in range(40)],
                                 "vec_id long, embedding array<double>")
-    guarded = similarity.embedding_near_dups(
-        emb, min_cos_x1000=300, max_bucket_size=10)
+    guarded = similarity.embedding_near_dups_multi(
+        emb, min_cos_x1000=300, n_tables=1, planes=4, max_bucket_size=10)
     assert guarded.count() == 0
-    open_ = similarity.embedding_near_dups(
-        emb, min_cos_x1000=300, max_bucket_size=1000)
+    open_ = similarity.embedding_near_dups_multi(
+        emb, min_cos_x1000=300, n_tables=1, planes=4, max_bucket_size=1000)
     assert open_.count() == 40 * 39 // 2
 
     g_multi = similarity.embedding_near_dups_multi(

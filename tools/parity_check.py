@@ -9,10 +9,11 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
@@ -45,54 +46,58 @@ def main():
     only = set(sys.argv[2:])
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    qs, os_ = entry.queries(), entry.oracle_sql()
     n_ok = n_bad = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            df = fn(spark, sf_dir)
-            cols = df.columns
-            rows = df.collect()
-        except Exception as ex:
-            print(f"FAIL  {name}: spark error: {ex}")
-            n_bad += 1
-            continue
-        if name not in os_:
-            print(f"rows  {name}: {len(rows)} rows (no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
-            continue
-        try:
-            res = con.sql(os_[name])
-            ocols = [c for c in res.columns]
-            orows = res.fetchall()
-        except Exception as ex:
-            print(f"FAIL  {name}: duckdb error: {ex}")
-            n_bad += 1
-            continue
-        if sorted(cols) != sorted(ocols):
-            print(f"FAIL  {name}: columns {sorted(cols)} != {sorted(ocols)}")
-            n_bad += 1
-            continue
-        a, b = rows_key(rows, cols), rows_key(orows, ocols)
-        if len(a) != len(b):
-            print(f"FAIL  {name}: row count {len(a)} != {len(b)}")
-            n_bad += 1
-        elif a != b:
-            diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
-            print(f"FAIL  {name}: value mismatch, e.g. {diff}")
-            n_bad += 1
-        else:
-            print(f"OK    {name}: {len(a)} rows [{time.time()-t0:.1f}s]")
-            n_ok += 1
+    for status, name, detail in check_parity(spark, sf_dir, only):
+        print(f"{status:<5} {name}: {detail}")
+        n_ok += status == "OK"
+        n_bad += status == "FAIL"
     print(f"\n{n_ok} ok, {n_bad} failed")
     spark.stop()
     sys.exit(1 if n_bad else 0)
+
+
+def check_parity(spark, sf_dir, names=None):
+    """Yield (status, name, detail) per queries() entry, restricted to
+    ``names`` when given: status "OK" when the Spark rows equal the
+    oracle_sql() rows run on DuckDB over the same sf dir, "FAIL" on an
+    error or any mismatch, "rows" for an entry without an oracle."""
+    with duckdb.connect() as con:
+        for t in TABLES:
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        qs, os_ = entry.queries(), entry.oracle_sql()
+        for name, fn in qs.items():
+            if names and name not in names:
+                continue
+            t0 = time.time()
+            try:
+                df = fn(spark, sf_dir)
+                cols = df.columns
+                rows = df.collect()
+            except Exception as ex:
+                yield "FAIL", name, f"spark error: {ex}"
+                continue
+            if name not in os_:
+                yield "rows", name, (f"{len(rows)} rows (no oracle) "
+                                     f"[{time.time()-t0:.1f}s]")
+                continue
+            try:
+                res = con.sql(os_[name])
+                ocols = [c for c in res.columns]
+                orows = res.fetchall()
+            except Exception as ex:
+                yield "FAIL", name, f"duckdb error: {ex}"
+                continue
+            if sorted(cols) != sorted(ocols):
+                yield "FAIL", name, f"columns {sorted(cols)} != {sorted(ocols)}"
+                continue
+            a, b = rows_key(rows, cols), rows_key(orows, ocols)
+            if len(a) != len(b):
+                yield "FAIL", name, f"row count {len(a)} != {len(b)}"
+            elif a != b:
+                diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
+                yield "FAIL", name, f"value mismatch, e.g. {diff}"
+            else:
+                yield "OK", name, f"{len(a)} rows [{time.time()-t0:.1f}s]"
 
 
 if __name__ == "__main__":

@@ -227,7 +227,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def kg_annotations_degenerate(s, d):
         """Kernel plumbing under a VALUE-checked driver oracle (VERDICT
         r2 #6): feed every sentence's FIRST token through the real
-        mapInPandas kernel as a 1-token sentence.  For 1-token input
+        mapInArrow kernel as a 1-token sentence.  For 1-token input
         the outputs have closed forms the oracle verifies WITHOUT
         running any kernel: MST head is always 0 (single root), tags
         always land in the fixed seeded vocab (special-mask), and every

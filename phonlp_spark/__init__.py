@@ -6,7 +6,7 @@ Re-expresses the query/data-processing capabilities of VinAIResearch/PhoNLP
 
   documents (interleaved text+media spans)
     -> sentence explode (salted, skew-aware)
-    -> Arrow-vectorized annotation kernel (mapInPandas; pure numpy)
+    -> Arrow-vectorized annotation kernel (mapInArrow; pure numpy)
     -> mentions + (subj, pred, obj) triples
     -> broadcast-dictionary entity linking
     -> connected-components canonicalization (large-star/small-star)

@@ -2,7 +2,7 @@
 
 This package is the single-process "oracle" AND the per-batch worker
 kernel: the Spark pipeline ships these functions to executors inside
-mapInPandas, so engine-vs-oracle parity is exact by construction.
+mapInArrow, so engine-vs-oracle parity is exact by construction.
 """
 
 from phonlp_spark.kernel.vocab import Vocab, default_vocabs  # noqa: F401

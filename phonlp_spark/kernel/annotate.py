@@ -2,7 +2,7 @@
 
 This is both the single-process oracle and the per-Arrow-batch worker
 kernel (the Spark stage in phonlp_spark/pipeline/annotate.py calls this
-function inside mapInPandas — identical code path by construction).
+function inside mapInArrow — identical code path by construction).
 
 Dataflow parity with the reference (phonlp/annotate_model.py):
 
@@ -49,21 +49,17 @@ from phonlp_spark.kernel.viterbi import viterbi_batch
 from phonlp_spark.kernel.vocab import default_vocabs
 from phonlp_spark.kernel.weights import Biaffine, ModelWeights, seeded_weights, special_mask
 
-import os as _os
-
 MAX_SENT_TOKENS = 256  # hard cap; longer sentences are annotated on the
                        # first 256 tokens, overflow tokens get neutral tags
 _LEN_BUCKET = 8        # pad-waste bound inside a batch
 # Sentences per fused forward: bounds the worker's peak working set
 # (and therefore heap growth / first-touch page faults) regardless of
-# Arrow batch size.  Swept on this host with 8 and 32 pinned workers
+# Arrow batch size.  Swept on a 32-core host with 8 and 32 pinned workers
 # (kernel-only microbench, 10-20k sentences/worker): 256 and 128 tie
 # within run-to-run noise and both beat the former 512 by 15-60%, with
 # the gap WIDEST at 32 workers — the chunk's matmul working set falls
-# out of cache exactly when all cores contend for DRAM.  Override per
-# deployment via PHONLP_SPARK_FORWARD_CHUNK (the session factory
-# forwards it to executors).
-_FORWARD_CHUNK = int(_os.environ.get("PHONLP_SPARK_FORWARD_CHUNK", "256"))
+# out of cache exactly when all cores contend for DRAM.
+_FORWARD_CHUNK = 256
 
 
 def _relu(x: np.ndarray) -> np.ndarray:
@@ -151,9 +147,6 @@ class AnnotationKernel:
           mentions [(start, end, type, text)] (inclusive 0-based),
           triples [(subj, pred, obj, subj_type, obj_type, rule)].
         """
-        sentences = [
-            s.tolist() if hasattr(s, "tolist") else list(s) for s in sentences
-        ]
         out: list[dict | None] = [None] * len(sentences)
         buckets: dict[int, list[int]] = {}
         for i, s in enumerate(sentences):

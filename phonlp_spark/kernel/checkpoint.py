@@ -236,7 +236,7 @@ def demo_subword_encoder(dim: int = 64):
     subwords (head + '##'-prefixed tail), each subword embeds via the
     hashed n-gram encoder, and the per-word vector is the FIRST
     subword's embedding.  Exercises the real gather convention through
-    any consumer (incl. the Spark mapInPandas stage) with no torch."""
+    any consumer (incl. the Spark mapInArrow stage) with no torch."""
     from phonlp_spark.kernel.encoder import HashedNgramEncoder
 
     base = HashedNgramEncoder(dim=dim)

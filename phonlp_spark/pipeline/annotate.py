@@ -1,7 +1,7 @@
 """The Arrow-vectorized annotation stage and its exploded views.
 
 Spark lifecycle (SURVEY.md §3.1): sentence rows -> optional salted
-repartition (skew) -> ONE mapInPandas stage that fuses encode + POS +
+repartition (skew) -> ONE mapInArrow stage that fuses encode + POS +
 NER-Viterbi + biaffine + MST + BIOES mention decode + triple rules
 (reference steps phonlp/annotate_model.py:230-293 collapsed into one
 Arrow hop; keys travel with rows so the reference's two-level
@@ -9,17 +9,21 @@ sort/unsort, annotate_model.py:270-293, is unnecessary) -> JVM-side
 explodes for the annotation/mention/triple long tables.
 
 No per-row Python anywhere: the kernel consumes whole Arrow batches and
-is itself batch-vectorized (length-bucketed padding inside).
+is itself batch-vectorized (length-bucketed padding inside).  The
+stage's Arrow layout is derived from ANNOTATED_SCHEMA, so the struct
+field names are spelled only in MENTION_TYPE / TRIPLE_TYPE; the
+kernel's mention/triple tuples fill those structs in field order.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MENTION_TYPE = T.StructType([
     T.StructField("start", T.IntegerType()),
@@ -52,6 +56,7 @@ ANNOTATED_SCHEMA = T.StructType([
 
 
 _KEY_COLS = ("doc_id", "span_idx", "sent_id")
+_PASSTHROUGH = (*_KEY_COLS, "tokens")
 
 
 # custom-factory kernels memoized per (python worker process, factory):
@@ -111,12 +116,14 @@ def _worker_kernel(key: str | None, kernel_factory):
     return kernel
 
 
-def _make_annotate_fn(columns: tuple[str, ...], kernel_factory=None):
-    """Batch fn emitting only the requested non-key columns.
+def _make_annotate_fn(schema: T.StructType, kernel_factory=None):
+    """Batch fn emitting the columns of ``schema`` (keys + requested).
 
-    Column pruning cannot cross a mapInPandas boundary, so callers that
+    Column pruning cannot cross a mapInArrow boundary, so callers that
     only consume mentions/triples (the KG path) skip building and
-    Arrow-serializing the five token-level arrays entirely.
+    Arrow-serializing the five token-level arrays entirely.  The keys
+    and ``tokens`` pass through from the input batch (cast to their
+    declared types); every other column is built from the kernel output.
 
     ``kernel_factory``: zero-arg callable building the worker-side
     kernel (cloudpickled into the task; called once per python worker
@@ -126,30 +133,17 @@ def _make_annotate_fn(columns: tuple[str, ...], kernel_factory=None):
     SubwordEncoder (kernel/checkpoint.py) over its tokenizer+model.
     """
     factory_key = None if kernel_factory is None else _factory_key(kernel_factory)
+    arrow_schema = to_arrow_schema(schema)
 
-    def annotate_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def annotate_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # one kernel (weights + memoized encoder) per python worker
         kernel = _worker_kernel(factory_key, kernel_factory)
-        for pdf in batches:
-            anns = kernel.annotate(list(pdf["tokens"]))
-            data = {k: pdf[k].values for k in _KEY_COLS}
-            for c in columns:
-                if c == "mentions":
-                    data[c] = [
-                        [{"start": s, "end": e, "type": t, "text": x}
-                         for (s, e, t, x) in a["mentions"]]
-                        for a in anns
-                    ]
-                elif c == "triples":
-                    data[c] = [
-                        [{"subj": s, "pred": p, "obj": o,
-                          "subj_type": st, "obj_type": ot, "rule": r}
-                         for (s, p, o, st, ot, r) in a["triples"]]
-                        for a in anns
-                    ]
-                else:
-                    data[c] = [a[c] for a in anns]
-            yield pd.DataFrame(data)
+        for rb in batches:
+            anns = kernel.annotate(rb.column("tokens").to_pylist())
+            yield pa.RecordBatch.from_arrays([
+                rb.column(f.name).cast(f.type) if f.name in _PASSTHROUGH
+                else pa.array([a[f.name] for a in anns], type=f.type)
+                for f in arrow_schema], schema=arrow_schema)
 
     return annotate_batches
 
@@ -185,8 +179,8 @@ def annotate_sentences_df(
     schema = T.StructType(
         [f for f in ANNOTATED_SCHEMA.fields
          if f.name in _KEY_COLS or f.name in cols])
-    return sentences.mapInPandas(_make_annotate_fn(cols, kernel_factory),
-                                 schema=schema)
+    return sentences.mapInArrow(_make_annotate_fn(schema, kernel_factory),
+                                schema=schema)
 
 
 def annotations_long(annotated: DataFrame) -> DataFrame:
@@ -208,22 +202,13 @@ def annotations_long(annotated: DataFrame) -> DataFrame:
 
 
 def mentions_df(annotated: DataFrame) -> DataFrame:
-    ex = annotated.select("doc_id", "sent_id", F.explode("mentions").alias("m"))
-    return ex.select(
-        "doc_id", "sent_id",
-        F.col("m.start").alias("start"), F.col("m.end").alias("end"),
-        F.col("m.type").alias("type"), F.col("m.text").alias("text"),
-    )
+    return annotated.select("doc_id", "sent_id", F.explode("mentions").alias("m")) \
+        .select("doc_id", "sent_id", "m.*")
 
 
 def triples_df(annotated: DataFrame) -> DataFrame:
-    ex = annotated.select("doc_id", "sent_id", F.explode("triples").alias("t"))
-    return ex.select(
-        "doc_id", "sent_id",
-        F.col("t.subj").alias("subj"), F.col("t.pred").alias("pred"),
-        F.col("t.obj").alias("obj"), F.col("t.subj_type").alias("subj_type"),
-        F.col("t.obj_type").alias("obj_type"), F.col("t.rule").alias("rule"),
-    )
+    return annotated.select("doc_id", "sent_id", F.explode("triples").alias("t")) \
+        .select("doc_id", "sent_id", "t.*")
 
 
 def reassemble_documents(documents: DataFrame, annotated: DataFrame) -> DataFrame:
@@ -231,8 +216,10 @@ def reassemble_documents(documents: DataFrame, annotated: DataFrame) -> DataFram
     span sequence byte-for-byte (per-row invariant: kind, text,
     media_ref, order — BASELINE.json input_hint).
 
-    Media spans pass through from the source; text spans are re-joined
-    from the annotated token arrays at their original offsets.
+    Media spans and empty text spans (which split into no sentence)
+    pass through from the source in one explode; the other text spans
+    are re-joined from the annotated token arrays at their original
+    offsets.
     """
     rebuilt_text = annotated.select(
         "doc_id",
@@ -241,21 +228,14 @@ def reassemble_documents(documents: DataFrame, annotated: DataFrame) -> DataFram
         F.array_join("tokens", " ").alias("text"),
         F.lit("").alias("media_ref"),
     )
-    media = (
+    passthrough = (
         documents.select("doc_id", F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") != "text")
+        .filter((F.col("s.kind") != "text") | (F.length("s.text") == 0))
         .select("doc_id", F.col("s.offset").alias("offset"),
                 F.col("s.kind").alias("kind"), F.col("s.text").alias("text"),
                 F.col("s.media_ref").alias("media_ref"))
     )
-    empty_text = (
-        documents.select("doc_id", F.explode("spans").alias("s"))
-        .filter((F.col("s.kind") == "text") & (F.length("s.text") == 0))
-        .select("doc_id", F.col("s.offset").alias("offset"),
-                F.col("s.kind").alias("kind"), F.col("s.text").alias("text"),
-                F.col("s.media_ref").alias("media_ref"))
-    )
-    all_spans = rebuilt_text.unionByName(media).unionByName(empty_text)
+    all_spans = rebuilt_text.unionByName(passthrough)
     return (
         all_spans.groupBy("doc_id")
         .agg(F.sort_array(F.collect_list(F.struct(

@@ -66,22 +66,27 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
 
 
 def done_buckets(spark: SparkSession, out_dir: str, fingerprint: str,
-                 n_buckets: int) -> list[int]:
-    """Bucket ids safe to skip: done, same input, AND same bucketing.
+                 n_buckets: int) -> tuple[list[int], dict[int, int]]:
+    """(bucket ids safe to skip, max recorded attempt per bucket), from
+    ONE pass over the manifest rows of this input AND this bucketing.
 
     A bucket id means a different document set under a different
     n_buckets, so manifests written with another layout never satisfy
-    resume (they'd silently leave documents unprocessed)."""
+    resume (they'd silently leave documents unprocessed) nor count
+    toward a bucket's attempts."""
     mf = read_manifest(spark, out_dir)
     if mf is None or "n_buckets" not in mf.columns:
-        return []
-    return [
-        r["bucket"]
-        for r in mf.filter((F.col("status") == "done")
-                           & (F.col("input_fingerprint") == fingerprint)
-                           & (F.col("n_buckets") == n_buckets))
-        .select("bucket").distinct().collect()
-    ]
+        return [], {}
+    rows = (
+        mf.filter((F.col("input_fingerprint") == fingerprint)
+                  & (F.col("n_buckets") == n_buckets))
+        .groupBy("bucket")
+        .agg(F.bool_or(F.col("status") == "done").alias("done"),
+             F.max("attempt").alias("attempt"))
+        .collect()
+    )
+    return ([int(r["bucket"]) for r in rows if r["done"]],
+            {int(r["bucket"]): int(r["attempt"]) for r in rows})
 
 
 def canonical_entities(alias_dict: DataFrame) -> DataFrame:
@@ -250,20 +255,12 @@ def run_kg(
     docs = documents.withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
     fp = input_fingerprint(documents)
-    skip = done_buckets(spark, out_dir, fp, n_buckets) if resume else []
-    todo = docs.filter(~F.col("bucket").isin(skip)) if skip else docs
     # per-bucket attempt lineage: a recomputed bucket's attempt is
     # 1 + its max recorded attempt for this input+layout (crashed
     # attempts append no row, so the counter tracks RECORDED runs)
-    prior_attempts: dict[int, int] = {}
-    mf = read_manifest(spark, out_dir)
-    if mf is not None and "n_buckets" in mf.columns:
-        prior_attempts = {
-            int(r["bucket"]): int(r["a"])
-            for r in mf.filter((F.col("input_fingerprint") == fp)
-                               & (F.col("n_buckets") == n_buckets))
-            .groupBy("bucket").agg(F.max("attempt").alias("a")).collect()
-        }
+    done, prior_attempts = done_buckets(spark, out_dir, fp, n_buckets)
+    skip = done if resume else []
+    todo = docs.filter(~F.col("bucket").isin(skip)) if skip else docs
 
     if todo.isEmpty():
         return {"run_id": run_id, "processed_buckets": [], "skipped_buckets": skip,

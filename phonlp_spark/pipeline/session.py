@@ -3,7 +3,8 @@
 Tuned for correctness at any scale and benchmarked on local[N]:
 - AQE on (runtime coalescing + skew-join splitting),
 - Arrow enabled for pandas interchange, bounded record batches so the
-  annotation kernel's per-batch memory is capped,
+  annotation kernel's per-batch memory is capped (the batch bound also
+  sizes the annotation stage's mapInArrow batches),
 - shuffle partitions sized to the cluster (overridable).
 """
 
@@ -54,10 +55,6 @@ def get_spark(
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "1073741824")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        # kernel forward-chunk knob reaches python workers (see
-        # kernel/annotate.py _FORWARD_CHUNK for the measured sweep)
-        .config("spark.executorEnv.PHONLP_SPARK_FORWARD_CHUNK",
-                os.environ.get("PHONLP_SPARK_FORWARD_CHUNK", "256"))
         # keep python workers alive across jobs: respawning re-pays the
         # host's lazy-memory warmup (~200MB of first-touch per worker)
         .config("spark.python.worker.reuse", "true")
@@ -87,8 +84,8 @@ def get_spark(
         # records/batch runs ~15-25% faster than 2k — fewer Arrow hops,
         # better length-bucketing inside the kernel; peak kernel memory
         # stays bounded by its internal forward chunking, not the batch
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "16384"))
+        # (override per session via get_spark(extra=...))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
         # local mode: the driver JVM hosts every task slot, so this IS
         # executor memory — 8g gave 32 concurrent tasks ~150 MB of
         # execution memory each, and wide-key aggregations (dedup pair

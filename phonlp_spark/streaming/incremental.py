@@ -42,11 +42,8 @@ def incremental_annotate(
     n_batches = [0]
 
     def process(batch_df, batch_id: int) -> None:
-        annotated = annotate_sentences_df(
-            split_sentences(batch_df), salt_partitions)
-        mt = annotated.select("doc_id", "span_idx", "sent_id",
-                              "tokens", "upos", "ner", "head", "deprel",
-                              "mentions", "triples").cache()
+        mt = annotate_sentences_df(
+            split_sentences(batch_df), salt_partitions).cache()
         annotations_long(mt).write.mode("append").parquet(f"{out_dir}/annotations")
         mentions_df(mt).write.mode("append").parquet(f"{out_dir}/mentions")
         triples_df(mt).write.mode("append").parquet(f"{out_dir}/triples")

@@ -1,8 +1,8 @@
 """Worker-importable test support.
 
-mapInPandas factories must live in an importable module — cloudpickle
-serializes them by module reference, and Spark's python workers cannot
-import pytest test files.  Nothing here runs in production paths.
+Kernel factories for the mapInArrow annotation stage must live in an
+importable module — cloudpickle serializes them by module reference,
+and Spark's python workers cannot import pytest test files.  Nothing here runs in production paths.
 """
 
 from __future__ import annotations
